@@ -30,6 +30,13 @@ from ..functions import money
 from ..functions.text import tokens
 from ..functions.timeutil import window_stamps
 
+# Every DWS stat is a 10 s tumbling event-time window closed by a 1 s
+# bounded-out-of-orderness watermark. The same function builds the
+# batch plan and the streaming query: on a batch frame Spark drops the
+# watermark, so batch results are unchanged.
+WINDOW = "10 seconds"
+WATERMARK = "1 second"
+
 
 def _sparse(df: DataFrame, et, sku, **metrics) -> DataFrame:
     """Project one source stream into the shared sparse ProductStats
@@ -53,26 +60,13 @@ def _sparse(df: DataFrame, et, sku, **metrics) -> DataFrame:
 def product_stats(page: DataFrame, display: DataFrame,
                   favor: DataFrame, cart: DataFrame,
                   order_wide: DataFrame, payment_wide: DataFrame,
-                  refund: DataFrame, comment: DataFrame,
-                  window_duration: str = "10 seconds",
-                  streaming_watermark: str | None = None,
-                  approx_distinct: bool = False) -> DataFrame:
+                  refund: DataFrame, comment: DataFrame) -> DataFrame:
     """The 7-source union → tumbling window reduce, keyed by sku_id.
 
-    With ``streaming_watermark`` set, the union gets a watermark on its
-    event-time column before the window reduce, making the identical
-    aggregation run in append-mode streaming (the distinct order
-    counts are already set-based, which streaming aggregation allows —
-    A4's exact-within-window semantics).
-
-    ``approx_distinct=True`` swaps the three set-based distinct order
-    counts for approx_count_distinct (HyperLogLog++): constant ~kB of
-    state per (window, sku) group instead of one set entry per
-    distinct order — the 100 TB default in the composed warehouse
-    topology, where a hot sku's per-window order set is unbounded.
-    The exact form remains for reference parity
-    (bean/ProductStats.java:74-85 keeps real Sets). The error band is
-    gated in tests (same 3σ discipline as dws._uv_expr's approx_uv).
+    The union carries one watermarked event-time column, so the same
+    aggregation runs in append-mode streaming. The distinct order
+    counts are exact sets (bean/ProductStats.java:74-85), which
+    streaming aggregation allows — A4's exact-within-window semantics.
     """
     one = F.lit(1).cast("long")
     et_ms = F.timestamp_millis(F.col("ts"))
@@ -108,18 +102,15 @@ def product_stats(page: DataFrame, display: DataFrame,
     unioned = reduce(DataFrame.unionByName,
                      [clicks, displays, favors, carts, orders, payments,
                       refunds, comments])
-    if streaming_watermark is not None:
-        unioned = unioned.withColumn(
-            "et", F.col("et").cast("timestamp")) \
-            .withWatermark("et", streaming_watermark)
-    if approx_distinct:
-        def distinct_ct(col: str):
-            return F.approx_count_distinct(col).cast("long")
-    else:
-        def distinct_ct(col: str):
-            return F.size(F.collect_set(col)).cast("long")
+    unioned = unioned.withColumn(
+        "et", F.col("et").cast("timestamp")) \
+        .withWatermark("et", WATERMARK)
+
+    def distinct_ct(col: str):
+        return F.size(F.collect_set(col)).cast("long")
+
     agg = (unioned
-           .groupBy(F.window("et", window_duration), "sku_id")
+           .groupBy(F.window("et", WINDOW), "sku_id")
            .agg(F.sum("click_ct").alias("click_ct"),
                 F.sum("display_ct").alias("display_ct"),
                 F.sum("favor_ct").alias("favor_ct"),
@@ -209,12 +200,12 @@ def visitor_stats_union(page: DataFrame, uv: DataFrame, jumps: DataFrame,
              .unionByName(keyed(jumps, "uj_ct"))
 
 
-def visitor_stats_agg(unioned: DataFrame,
-                      window_duration: str = "10 seconds") -> DataFrame:
+def visitor_stats_agg(unioned: DataFrame) -> DataFrame:
     """The windowed reduce over the sparse union (A2) — additive sums
     only, so it runs identically in batch and append-mode streaming."""
     return (unioned
-            .groupBy(F.window("et", window_duration),
+            .withWatermark("et", WATERMARK)
+            .groupBy(F.window("et", WINDOW),
                      "vc", "ch", "ar", "is_new")
             .agg(F.sum("pv_ct").alias("pv_ct"),
                  F.sum("sv_ct").alias("sv_ct"),
@@ -225,8 +216,8 @@ def visitor_stats_agg(unioned: DataFrame,
                     "pv_ct", "sv_ct", "uv_ct", "uj_ct", "dur_sum"))
 
 
-def visitor_stats(page: DataFrame, uv: DataFrame, jumps: DataFrame,
-                  window_duration: str = "10 seconds") -> DataFrame:
+def visitor_stats(page: DataFrame, uv: DataFrame,
+                  jumps: DataFrame) -> DataFrame:
     """VisitorStats: union of the pv/sv/dur stream, the UV stream and
     the bounce stream on the 4-dim key (VisitorStatsApp.java:64-180).
 
@@ -235,34 +226,38 @@ def visitor_stats(page: DataFrame, uv: DataFrame, jumps: DataFrame,
     fields (first value wins — the fixture keeps them stable per mid).
     """
     unioned = visitor_stats_union(page, uv, jumps, mid_dimensions(page))
-    return visitor_stats_agg(unioned, window_duration)
+    return visitor_stats_agg(unioned)
 
 
-def keyword_stats(page: DataFrame,
-                  window_duration: str = "10 seconds") -> DataFrame:
+def keyword_stats(page: DataFrame) -> DataFrame:
     """Search phrases from good_list pages → tokenizer UDTF analog →
-    windowed counts (KeywordStatsApp.java:55-74, exer item_type filter)."""
-    searches = page.filter(
-        (F.col("page.page_id") == "good_list")
-        & (F.col("page.item_type") == "keyword")
-        & F.col("page.item").isNotNull())
+    windowed counts (KeywordStatsApp.java:55-74, exer item_type filter).
+    The watermark sits on the page stream, before the filter."""
+    searches = (page
+                .withColumn("et", F.timestamp_millis("ts"))
+                .withWatermark("et", WATERMARK)
+                .filter((F.col("page.page_id") == "good_list")
+                        & (F.col("page.item_type") == "keyword")
+                        & F.col("page.item").isNotNull()))
     words = searches.select(
-        F.timestamp_millis(F.col("ts")).alias("et"),
-        F.explode(tokens(F.lower(F.col("page.item")))).alias("keyword"))
+        "et", F.explode(tokens(F.lower(F.col("page.item"))))
+        .alias("keyword"))
     return (words
-            .groupBy(F.window("et", window_duration), "keyword")
+            .groupBy(F.window("et", WINDOW), "keyword")
             .agg(F.count(F.lit(1)).alias("ct"))
             .select(*window_stamps(), "keyword", "ct"))
 
 
-def province_stats_sql(spark: SparkSession, order_wide: DataFrame,
-                       window_duration: str = "10 seconds") -> DataFrame:
+def province_stats_sql(spark: SparkSession,
+                       order_wide: DataFrame) -> DataFrame:
     """The SQL-surface DWS job on the enriched order stream (corrected
-    exer SQL shape: tumble window + count(distinct) + sum)."""
+    exer SQL shape: tumble window + count(distinct) + sum). Batch
+    only: the reference the streaming province job is checked
+    against."""
     order_wide.createOrReplaceTempView("_gm_order_wide")
     return spark.sql(f"""
-        SELECT window(order_et, '{window_duration}').start AS stt,
-               window(order_et, '{window_duration}').end   AS edt,
+        SELECT window(order_et, '{WINDOW}').start AS stt,
+               window(order_et, '{WINDOW}').end   AS edt,
                province_id,
                province_name,
                province_area_code,
@@ -272,7 +267,7 @@ def province_stats_sql(spark: SparkSession, order_wide: DataFrame,
                     AS decimal(18,2))                      AS order_amount,
                count(DISTINCT order_id)                    AS order_count
         FROM _gm_order_wide
-        GROUP BY window(order_et, '{window_duration}'), province_id,
+        GROUP BY window(order_et, '{WINDOW}'), province_id,
                  province_name, province_area_code, province_iso_code,
                  province_3166_2_code
     """)

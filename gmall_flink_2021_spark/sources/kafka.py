@@ -1,7 +1,7 @@
 """Kafka source/sink wiring (S1/S6/K1/K2).
 
 No broker exists in the test environment, so these builders return
-the configured reader/writer without starting it; the file-backed
+the configured reader without starting it; the file-backed
 sources in streaming/jobs.py present the identical
 ``value: string`` surface to every operator, which is what makes the
 operator layer transport-agnostic. The option sets and the dynamic
@@ -69,17 +69,6 @@ def producer_options(brokers: str, checkpoint: str) -> dict[str, str]:
         "kafka.bootstrap.servers": brokers,
         "checkpointLocation": checkpoint,
     }
-
-
-def kafka_sink(df: DataFrame, brokers: str, topic: str | None,
-               checkpoint: str, topic_col: str | None = None):
-    """K1 (fixed topic) / K2 (dynamic topic from a record column)."""
-    out = route_topic(df, topic_col)
-    writer = (out.writeStream.format("kafka")
-              .options(**producer_options(brokers, checkpoint)))
-    if topic_col is None:
-        writer = writer.option("topic", topic)
-    return writer
 
 
 # The DWD split-topic topology (BaseLogApp.java:110-117 side-output

@@ -13,6 +13,9 @@ Kafka-shape note: in production each reader below becomes
 (MyKafkaUtil.java:29-37); file sources present the identical
 `value: string` / typed-row surface for tests, so the operator code
 does not change.
+
+Every foreachBatch job here runs through ``sinks.drain``;
+``run_to_completion`` is the memory-sink runner the tests read back.
 """
 
 from __future__ import annotations
@@ -21,12 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-
-
-def read_log_stream(spark: SparkSession, path: str) -> DataFrame:
-    """ods_base_log as a streaming DataFrame[value: string] (S1)."""
-    return (spark.readStream.format("text").load(path)
-            .withColumnRenamed("value", "value"))
+from . import sinks
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -129,7 +127,6 @@ def uv_sketch_stream(events_stream: DataFrame, store_path: str,
     against a partial store and skipped itself (silent row loss). A
     batch id ≤ the stored one is a no-op."""
     from ..operators.dwm import uv_daily_sketches
-    from . import sinks
 
     spark = events_stream.sparkSession
 
@@ -160,10 +157,7 @@ def uv_sketch_stream(events_stream: DataFrame, store_path: str,
             merged.withColumn("merged_bid", F.lit(bid).cast("long")),
             store_path)
 
-    q = (events_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    sinks.drain(events_stream, sink, checkpoint)
 
 
 def contamination_stream(corpus_stream: DataFrame, bench_index: DataFrame,
@@ -175,16 +169,12 @@ def contamination_stream(corpus_stream: DataFrame, bench_index: DataFrame,
     so the union of emitted batches equals the batch operator
     row-for-row; writes are overwrite-by-batch-id (exactly-once)."""
     from ..operators.textstats import contamination_against
-    from . import sinks
 
     def sink(batch: DataFrame, bid: int) -> None:
         sinks.write_idempotent(
             contamination_against(batch, bench_index), bid, out_path)
 
-    q = (corpus_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    sinks.drain(corpus_stream, sink, checkpoint)
 
 
 def classifier_scores_stream(doc_stream: DataFrame, weights: DataFrame,
@@ -200,17 +190,13 @@ def classifier_scores_stream(doc_stream: DataFrame, weights: DataFrame,
     corpus release just filters on the stored keep_label instead of
     re-reading text."""
     from ..operators.textstats import hashed_classifier_scores
-    from . import sinks
 
     def sink(batch: DataFrame, bid: int) -> None:
         sinks.write_idempotent(
             hashed_classifier_scores(batch, weights=weights), bid,
             out_path)
 
-    q = (doc_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    sinks.drain(doc_stream, sink, checkpoint)
 
 
 def segment_dedup_stream(doc_stream: DataFrame, out_path: str,
@@ -232,7 +218,6 @@ def segment_dedup_stream(doc_stream: DataFrame, out_path: str,
     (broadcast-eligible while small, shuffle-join beyond)."""
     from ..operators.dedup import (doc_segments, first_occurrence,
                                    segment_rebuild)
-    from . import sinks
 
     def sink(batch: DataFrame, bid: int) -> None:
         spark = batch.sparkSession
@@ -255,10 +240,7 @@ def segment_dedup_stream(doc_stream: DataFrame, out_path: str,
         sinks.write_idempotent(segment_rebuild(kept), bid, out_path)
         kept.unpersist()
 
-    q = (doc_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    sinks.drain(doc_stream, sink, checkpoint)
 
 
 def kmeans_score_stream(emb_stream: DataFrame,
@@ -314,7 +296,6 @@ def duplicate_spans_stream(doc_stream: DataFrame, out_path: str,
     distinct span — at corpus scale a partitioned parquet table the
     batch left-joins (broadcast-eligible while small)."""
     from ..operators.dedup import span_hashes
-    from . import sinks
 
     def sink(batch: DataFrame, bid: int) -> None:
         spark = batch.sparkSession
@@ -344,10 +325,7 @@ def duplicate_spans_stream(doc_stream: DataFrame, out_path: str,
         sinks.write_idempotent(new_h, bid, state_path)
         spans.unpersist()
 
-    q = (doc_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    sinks.drain(doc_stream, sink, checkpoint)
 
 
 def heavy_hitter_stream(doc_stream: DataFrame, store_path: str,
@@ -382,7 +360,6 @@ def heavy_hitter_stream(doc_stream: DataFrame, store_path: str,
     against out-of-band store damage.
     """
     from ..functions.text import tokens
-    from . import sinks
 
     spark = doc_stream.sparkSession
     # both sentinels contain a space: unreachable as tokens
@@ -435,10 +412,7 @@ def heavy_hitter_stream(doc_stream: DataFrame, store_path: str,
         sinks.publish_store(out, store_path)
         bc.unpersist()
 
-    q = (doc_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    sinks.drain(doc_stream, sink, checkpoint)
 
 
 def changelog_apply_stream(change_stream: DataFrame, table_path: str,
@@ -458,7 +432,6 @@ def changelog_apply_stream(change_stream: DataFrame, table_path: str,
     full changelog drains, analytics.snapshot_diff(applied, source)
     must return ZERO rows — the audit a real CDC pipeline runs to
     certify a replica."""
-    from . import sinks
 
     def sink(batch: DataFrame, bid: int) -> None:
         if not batch.head(1):
@@ -466,10 +439,7 @@ def changelog_apply_stream(change_stream: DataFrame, table_path: str,
         sinks.upsert_dim(batch, table_path, pk=pk, order_col=order_col,
                          op_col=op_col, transient_cols=(order_col,))
 
-    q = (change_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    sinks.drain(change_stream, sink, checkpoint)
 
 
 def minhash_dedup_stream(doc_stream: DataFrame, out_path: str,
@@ -491,7 +461,6 @@ def minhash_dedup_stream(doc_stream: DataFrame, out_path: str,
     neither consults its own partial write nor double-appends. State
     is one 32-hex bucket hash + first doc_id per DISTINCT bucket —
     bounded by corpus novelty, not corpus size."""
-    from . import sinks
 
     def sink(batch: DataFrame, bid: int) -> None:
         out, new_b, banded = _batch_dedup_marks(batch, bid, state_path)
@@ -499,10 +468,7 @@ def minhash_dedup_stream(doc_stream: DataFrame, out_path: str,
         sinks.write_idempotent(new_b, bid, state_path)
         banded.unpersist()
 
-    q = (doc_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    sinks.drain(doc_stream, sink, checkpoint)
 
 
 def _batch_dedup_marks(batch: DataFrame, bid: int, state_path: str):
@@ -566,7 +532,6 @@ def corpus_funnel_stream(doc_stream: DataFrame, out_path: str,
     body, shared state layout). Exactly-once via overwrite-by-batchId
     on both partials and index."""
     from ..operators.textstats import funnel_counts, funnel_gates
-    from . import sinks
 
     def sink(batch: DataFrame, bid: int) -> None:
         marks, new_b, banded = _batch_dedup_marks(batch, bid, state_path)
@@ -577,10 +542,7 @@ def corpus_funnel_stream(doc_stream: DataFrame, out_path: str,
         sinks.write_idempotent(new_b, bid, state_path)
         banded.unpersist()
 
-    q = (doc_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    sinks.drain(doc_stream, sink, checkpoint)
 
 
 def script_mix_stream(doc_stream: DataFrame, out_path: str,
@@ -592,16 +554,12 @@ def script_mix_stream(doc_stream: DataFrame, out_path: str,
     script_mix_stats on any corpus split (counters are per-doc and
     associative; no state). Exactly-once via overwrite-by-batchId."""
     from ..operators.textstats import script_mix_partials
-    from . import sinks
 
     def sink(batch: DataFrame, bid: int) -> None:
         sinks.write_idempotent(script_mix_partials(batch), bid,
                                out_path)
 
-    q = (doc_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    sinks.drain(doc_stream, sink, checkpoint)
 
 
 def token_fertility_stream(doc_stream: DataFrame, out_path: str,
@@ -610,16 +568,12 @@ def token_fertility_stream(doc_stream: DataFrame, out_path: str,
     additive-partials contract as script_mix_stream, with
     textstats.token_fertility_partials / token_fertility_readout."""
     from ..operators.textstats import token_fertility_partials
-    from . import sinks
 
     def sink(batch: DataFrame, bid: int) -> None:
         sinks.write_idempotent(token_fertility_partials(batch), bid,
                                out_path)
 
-    q = (doc_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    sinks.drain(doc_stream, sink, checkpoint)
 
 
 def near_dup_rate_stream(doc_stream: DataFrame, out_path: str,
@@ -633,7 +587,6 @@ def near_dup_rate_stream(doc_stream: DataFrame, out_path: str,
     (same caveat as corpus_funnel_stream). Exactly-once via
     overwrite-by-batchId on both partials and index."""
     from ..operators.dedup import near_dup_rate_partials
-    from . import sinks
 
     def sink(batch: DataFrame, bid: int) -> None:
         marks, new_b, banded = _batch_dedup_marks(batch, bid,
@@ -643,10 +596,7 @@ def near_dup_rate_stream(doc_stream: DataFrame, out_path: str,
         sinks.write_idempotent(new_b, bid, state_path)
         banded.unpersist()
 
-    q = (doc_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    sinks.drain(doc_stream, sink, checkpoint)
 
 
 def pq_encode_stream(emb_stream: DataFrame,
@@ -709,7 +659,6 @@ def ann_query_stream(query_stream: DataFrame, corpus: DataFrame,
     from ..functions.vectors import as_double
     from ..operators.similarity import (ivf_search, label_centroids,
                                         valid_embeddings)
-    from . import sinks
 
     corpus = valid_embeddings(corpus)
     cents = label_centroids(corpus).persist()
@@ -723,41 +672,10 @@ def ann_query_stream(query_stream: DataFrame, corpus: DataFrame,
                        exclude_self=exclude_self),
             bid, out_path)
 
-    q = (query_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    cents.unpersist()
-
-
-def uv_native_dedup_stream(events: DataFrame,
-                           watermark: str = "1 day") -> DataFrame:
-    """O6's UV dedup on Spark's NATIVE watermarked-dedup state
-    operator (dropDuplicatesWithinWatermark) instead of the explicit
-    applyInPandasWithState/TTL form (streaming/stateful.py) — the
-    engine-managed alternative: state eviction rides the watermark,
-    no custom timeout code. Emits each (day, user_id) once — the
-    first-visit stream — equal as a SET to the batch distinct.
-
-    The two forms coexist deliberately: the explicit-state form pins
-    the reference's 1-day-TTL semantics (UniqueVisitApp.java) exactly
-    and carries per-key metadata; this form is what you reach for
-    when the key itself defines the dedup and the watermark bounds
-    state — fewer moving parts, JVM-managed store.
-
-    The watermark IS the dedup horizon: state for a (day, user) key
-    is evicted once the watermark passes its event time + delay, and
-    a later same-day visit would re-emit. The default is therefore
-    1 DAY — matching the reference's 1-day TTL (UniqueVisitApp) so a
-    key stays deduped for exactly as long as its day key is live; a
-    short delay would silently turn exactly-once-per-day into
-    once-per-delay-window."""
-    with_et = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (with_et
-            .withWatermark("ts", watermark)
-            .withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
-            .dropDuplicatesWithinWatermark(["day", "user_id"])
-            .select("day", "user_id"))
+    try:
+        sinks.drain(query_stream, sink, checkpoint)
+    finally:
+        cents.unpersist()
 
 
 def with_row_audit(df: DataFrame, name: str = "row_audit") -> DataFrame:
@@ -773,65 +691,6 @@ def with_row_audit(df: DataFrame, name: str = "row_audit") -> DataFrame:
         F.count(F.lit(1)).alias("rows_seen"),
         F.sum(F.col(first).isNotNull().cast("long"))
         .alias("first_col_nonnull"))
-
-
-def first_visit_processor():
-    """The StatefulProcessor class behind ``uv_tws_stream``, exposed
-    via a factory so its per-key LOGIC is also unit-testable with a
-    fake state handle where the transformWithState runtime cannot
-    start (its state-server wire format needs a google.protobuf
-    runtime and the RocksDB state store provider). In THIS sandbox
-    both are satisfied — protobuf via the .pb_vendor shim wired in
-    tests/conftest.py — so the end-to-end streaming==batch test runs
-    for real; the fake-handle test remains as the pure-Python check
-    of the per-key logic."""
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class FirstVisit(StatefulProcessor):
-        def init(self, handle):
-            self.seen = handle.getValueState("seen", "seen boolean")
-
-        def handleInputRows(self, key, rows, timerValues):
-            for _ in rows:   # drain the iterator (API contract)
-                pass
-            if not self.seen.exists():
-                self.seen.update((True,))
-                yield pd.DataFrame({"day": [key[0]],
-                                    "user_id": [key[1]]})
-
-        def close(self):
-            pass
-
-    return FirstVisit
-
-
-def uv_tws_stream(events: DataFrame) -> DataFrame:
-    """O6's first-visit dedup on Spark 4's NEW arbitrary-stateful API
-    (transformWithStateInPandas / StatefulProcessor): per (day,
-    user_id) key a ValueState marks 'seen'; the first arrival emits,
-    every later one is swallowed. Third implementation of the same
-    semantics — explicit applyInPandasWithState TTL
-    (streaming/stateful.py), engine-managed dropDuplicates-
-    WithinWatermark (uv_native_dedup_stream), and this, the
-    composable-state successor API (typed state handles, timers,
-    per-key processors) that the old flatMapGroupsWithState family is
-    converging to. All three must emit the batch DISTINCT set."""
-    FirstVisit = first_visit_processor()
-    with_et = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (with_et
-            .withWatermark("ts", "1 second")
-            .withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
-            .groupBy("day", "user_id")
-            .transformWithStateInPandas(
-                FirstVisit(),
-                outputStructType="day string, user_id long",
-                outputMode="Append",
-                # the processor registers NO timers; declaring
-                # ProcessingTime makes shouldRunAnotherBatch always
-                # true (timers could fire anytime) and the query
-                # no-data-batches forever under availableNow
-                timeMode="None"))
 
 
 def quality_gated_sink(stream: DataFrame, rules: list, out_path: str,
@@ -850,7 +709,6 @@ def quality_gated_sink(stream: DataFrame, rules: list, out_path: str,
     the whole file/offset range, and the operator's job is to stop a
     bad LOAD from entering the table, not to salvage rows from it."""
     from ..operators import expectations
-    from . import sinks
 
     def sink(batch: DataFrame, bid: int) -> None:
         # one materialization serves the probe, the validation pass,
@@ -871,10 +729,7 @@ def quality_gated_sink(stream: DataFrame, rules: list, out_path: str,
         finally:
             batch.unpersist()
 
-    q = (stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    sinks.drain(stream, sink, checkpoint)
 
 
 def daily_value_store_stream(events_stream: DataFrame, store_path: str,
@@ -891,7 +746,6 @@ def daily_value_store_stream(events_stream: DataFrame, store_path: str,
     partial directories compact like any other sink layout
     (sinks.compact_table)."""
     from ..functions import money
-    from . import sinks
 
     def sink(batch: DataFrame, bid: int) -> None:
         from ..functions.timeutil import dated
@@ -903,10 +757,7 @@ def daily_value_store_stream(events_stream: DataFrame, store_path: str,
                       .alias("cents")))
         sinks.write_idempotent(daily, bid, store_path)
 
-    q = (events_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    sinks.drain(events_stream, sink, checkpoint)
 
 
 def zscores_from_daily_store(spark, store_path: str,
@@ -942,19 +793,17 @@ def dsir_score_stream(doc_stream: DataFrame, reference_docs: DataFrame,
     production deployment materializes all dim buckets (smoothing
     defines their llr) to score them at the floor instead."""
     from ..operators.textstats import dsir_llr_table, dsir_score
-    from . import sinks
 
     llr = dsir_llr_table(reference_docs).persist()
-    llr.count()
 
     def sink(batch: DataFrame, bid: int) -> None:
         sinks.write_idempotent(dsir_score(batch, llr), bid, out_path)
 
-    q = (doc_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    llr.unpersist()
+    try:
+        llr.count()
+        sinks.drain(doc_stream, sink, checkpoint)
+    finally:
+        llr.unpersist()
 
 
 def bpe_encode_stream(doc_stream: DataFrame, reference_docs: DataFrame,
@@ -971,24 +820,22 @@ def bpe_encode_stream(doc_stream: DataFrame, reference_docs: DataFrame,
     streamed corpus (pinned by test); writes are
     overwrite-by-batch-id (exactly-once)."""
     from ..operators import textstats
-    from . import sinks
 
     if n_merges is None:
         n_merges = textstats.BPE_N_MERGES
     _, vocab, lh = textstats.bpe_learn(reference_docs, n_merges)
     enc = textstats.bpe_vocab_encoder(vocab).persist()
-    enc.count()
-    lh.unpersist()
 
     def sink(batch: DataFrame, bid: int) -> None:
         sinks.write_idempotent(
             textstats.encode_with_vocab(batch, enc), bid, out_path)
 
-    q = (doc_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    enc.unpersist()
+    try:
+        enc.count()
+        lh.unpersist()
+        sinks.drain(doc_stream, sink, checkpoint)
+    finally:
+        enc.unpersist()
 
 
 def novelty_gate_stream(doc_stream: DataFrame, snapshot: DataFrame,
@@ -1005,10 +852,8 @@ def novelty_gate_stream(doc_stream: DataFrame, snapshot: DataFrame,
     are intentionally NOT decided here — minhash_dedup_stream owns
     the first-seen-wins rule; a production ingest runs both gates."""
     from ..operators import dedup
-    from . import sinks
 
     snap_idx = dedup.snapshot_index(snapshot).persist()
-    snap_idx.count()
 
     def sink(batch: DataFrame, bid: int) -> None:
         # the fused batch index is read twice (spine + band buckets);
@@ -1021,11 +866,11 @@ def novelty_gate_stream(doc_stream: DataFrame, snapshot: DataFrame,
         finally:
             batch_idx.unpersist()
 
-    q = (doc_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    snap_idx.unpersist()
+    try:
+        snap_idx.count()
+        sinks.drain(doc_stream, sink, checkpoint)
+    finally:
+        snap_idx.unpersist()
 
 
 def profile_sketch_stream(doc_stream: DataFrame, cols: list[str],
@@ -1045,7 +890,6 @@ def profile_sketch_stream(doc_stream: DataFrame, cols: list[str],
     in the store, atomic directory-rename publish, replayed batch ids
     are no-ops."""
     from ..operators.expectations import profile_sketches
-    from . import sinks
 
     spark = doc_stream.sparkSession
 
@@ -1077,10 +921,7 @@ def profile_sketch_stream(doc_stream: DataFrame, cols: list[str],
             merged.withColumn("merged_bid", F.lit(bid).cast("long")),
             store_path)
 
-    q = (doc_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    sinks.drain(doc_stream, sink, checkpoint)
 
 
 def scd2_enrich_stream(fact_stream: DataFrame, orders: DataFrame,
@@ -1095,13 +936,9 @@ def scd2_enrich_stream(fact_stream: DataFrame, orders: DataFrame,
     emitted batches equals the batch enrich row-for-row; writes are
     overwrite-by-batch-id (exactly-once)."""
     from ..operators.analytics import scd2_enrich
-    from . import sinks
 
     def sink(batch: DataFrame, bid: int) -> None:
         sinks.write_idempotent(scd2_enrich(orders, batch), bid,
                                out_path)
 
-    q = (fact_stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    sinks.drain(fact_stream, sink, checkpoint)

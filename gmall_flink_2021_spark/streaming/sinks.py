@@ -11,14 +11,33 @@ writers with Spark-managed parquet tables.
    sink_table group to its own directory in a single pass.
  - K4: dim upsert — Phoenix `upsert into` becomes a merge-by-pk
    (last-write-wins on the pk) into a parquet dim table.
+
+Every streaming job runs through :func:`drain`.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def drain(stream: DataFrame, sink: Callable[[DataFrame, int], None],
+          checkpoint: str) -> None:
+    """Run ``sink(batch, batch_id)`` over everything ``stream`` has
+    available (an availableNow foreachBatch query checkpointed at
+    ``checkpoint``) and return once it is consumed. A sink that
+    raises fails the query and the error is re-raised here; either
+    way no query outlives the call."""
+    q = (stream.writeStream.foreachBatch(sink)
+         .option("checkpointLocation", checkpoint)
+         .trigger(availableNow=True).start())
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
 
 
 def write_idempotent(df: DataFrame, batch_id: int, path: str) -> None:

@@ -11,13 +11,16 @@ Topology (mirrors SURVEY.md §0's layer diagram):
       └─ facts → typed streams
   page ──► UV dedup / bounce detect (stateful)              (UniqueVisit/UserJump)
   order⋈detail ──► order_wide  ──⋈payment──► payment_wide   (OrderWide/PaymentWide)
-  all ──► visitor/product/keyword stats → parquet           (DWS apps)
-  stats tables ──► gmv / trademark top-N readback           (publisher)
+  all ──► visitor/product/keyword/province stats → dws/*_stream (DWS apps)
+  product_stats_stream ──► gmv / trademark top-N readback   (publisher)
 
-Each writer is an idempotent foreachBatch parquet append
-(sinks.write_idempotent), checkpointed per job — the exactly-once
-analog of the reference's transactional producers. For test
-determinism the whole topology runs with availableNow triggers.
+Each job builds one DataFrame and hands it to sinks.drain, which runs
+it as an availableNow foreachBatch query checkpointed under ck/; each
+writer is an idempotent parquet append (sinks.write_idempotent) — the
+exactly-once analog of the reference's transactional producers. Each
+DWS stat has one table, written by its streaming job, as each
+reference DWS app writes one ClickHouse table; the batch functions in
+operators/gmall_dws are the check the tests compare it against.
 """
 
 from __future__ import annotations
@@ -28,33 +31,18 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import dwd, gmall_dwm
+from ..operators import dwd, gmall_dwm, gmall_dws
 from ..schemas import TABLE_PROCESS_SCHEMA
 from ..sources import cdc as cdc_src
 from . import sinks, stateful
 
 class Warehouse:
-    """Paths + SparkSession for one warehouse instance.
-
-    ``approx_distinct`` (default False — bit-exact reference parity:
-    the Set-accumulator counts the reference's bean/ProductStats.java
-    computes, so existing callers get reference-exact order_ct /
-    paid_order_ct / refund_order_ct without opting into anything).
-    Pass True — the recommended 100 TB deployment posture for
-    high-cardinality keys — to compute the per-window distinct order
-    counts with approx_count_distinct (HyperLogLog++, constant ~kB
-    state per group) instead of exact collect_set sets whose
-    streaming state grows with the true per-group cardinality; the
-    emitted counts are then ESTIMATES, and the error band is gated by
-    tests/test_warehouse.py against the exact batch job. Exact is
-    fine at the reference's per-sku 10 s grain; it is the hot-key
-    state growth at corpus scale that motivates the approx flag."""
+    """Paths + SparkSession for one warehouse instance."""
 
     def __init__(self, spark: SparkSession, workdir: str,
-                 config_rows: list[dict], approx_distinct: bool = False):
+                 config_rows: list[dict]):
         self.spark = spark
         self.work = workdir
-        self.approx_distinct = approx_distinct
         for d in ("ods_log", "ods_db", "ods_config", "dwd", "dwd_facts",
                   "dim", "dws", "ck"):
             os.makedirs(os.path.join(workdir, d), exist_ok=True)
@@ -196,10 +184,7 @@ class Warehouse:
                 shutil.rmtree(stage, ignore_errors=True)
             batch.unpersist()
 
-        q = (stream.writeStream.foreachBatch(sink)
-             .option("checkpointLocation", self._p("ck", "base_db"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        sinks.drain(stream, sink, self._p("ck", "base_db"))
 
     def run_base_log(self) -> None:
         """BaseLogApp: raw log → dirty + start/page/display topics."""
@@ -220,12 +205,17 @@ class Warehouse:
                 bid, self._p("dwd", "log_display"))
             batch.unpersist()
 
-        q = (parsed.writeStream.foreachBatch(sink)
-             .option("checkpointLocation", self._p("ck", "base_log"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        sinks.drain(parsed, sink, self._p("ck", "base_log"))
 
     # ------------------------------------------------------------ helpers
+    def _drain_to(self, stream: DataFrame, table: str,
+                  checkpoint: str) -> None:
+        """Drain ``stream`` into the idempotent parquet table at
+        ``table``, checkpointed under ck/``checkpoint``."""
+        sinks.drain(
+            stream, lambda b, i: sinks.write_idempotent(b, i, table),
+            self._p("ck", checkpoint))
+
     def dim(self, name: str) -> DataFrame:
         return sinks.read_dim(self.spark, self._p("dim", name))
 
@@ -251,36 +241,22 @@ class Warehouse:
             .select("d.*"))
 
     def page_stream(self) -> DataFrame:
-        schema = self.spark.read.parquet(
-            self._p("dwd", "log_page")).schema
-        return (self.spark.readStream.schema(schema)
-                .option("basePath", self._p("dwd", "log_page"))
-                .parquet(self._p("dwd", "log_page")))
+        return self._parquet_stream(self._p("dwd", "log_page"))
 
     # ------------------------------------------------------------ DWM
     def run_unique_visitors(self) -> None:
         """UniqueVisitApp: stateful daily-UV dedup → dwm_unique_visit."""
         proj = stateful.page_events_projection(self.page_stream()) \
             .withWatermark("et", "1 second")
-        uv = stateful.dedup_uv(proj)
-        q = (uv.writeStream.foreachBatch(
-                lambda b, i: sinks.write_idempotent(
-                    b, i, self._p("dwd", "dwm_unique_visit")))
-             .option("checkpointLocation", self._p("ck", "uv"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        self._drain_to(stateful.dedup_uv(proj),
+                       self._p("dwd", "dwm_unique_visit"), "uv")
 
     def run_user_jumps(self) -> None:
         """UserJumpDetailApp: stateful bounce detect → dwm_user_jump."""
         proj = stateful.page_events_projection(self.page_stream()) \
             .withWatermark("et", "1 second")
-        jumps = stateful.detect_jumps(proj)
-        q = (jumps.writeStream.foreachBatch(
-                lambda b, i: sinks.write_idempotent(
-                    b, i, self._p("dwd", "dwm_user_jump")))
-             .option("checkpointLocation", self._p("ck", "uj"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        self._drain_to(stateful.detect_jumps(proj),
+                       self._p("dwd", "dwm_user_jump"), "uj")
 
     def typed_fact_stream(self, table: str) -> DataFrame:
         """The fact topic as a stream: reads the routed parquet dir
@@ -311,10 +287,7 @@ class Warehouse:
             sinks.write_idempotent(enriched, bid,
                                    self._p("dwd", "dwm_order_wide"))
 
-        q = (wide.writeStream.foreachBatch(sink)
-             .option("checkpointLocation", self._p("ck", "order_wide"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        sinks.drain(wide, sink, self._p("ck", "order_wide"))
 
     def run_payment_wide(self) -> None:
         """PaymentWideApp: payment topic ⋈ the materialized order-wide
@@ -324,24 +297,39 @@ class Warehouse:
         ow_path = self._p("dwd", "dwm_order_wide")
         ow = self._parquet_stream(ow_path).drop("batch_id")
         wide = gmall_dwm.payment_wide_join(pay, ow, streaming=True)
-        q = (wide.writeStream.foreachBatch(
-                lambda b, i: sinks.write_idempotent(
-                    b, i, self._p("dwd", "dwm_payment_wide")))
-             .option("checkpointLocation", self._p("ck", "payment_wide"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        self._drain_to(wide, self._p("dwd", "dwm_payment_wide"),
+                       "payment_wide")
+
+    def _parquet_stream(self, path: str) -> DataFrame:
+        schema = self.spark.read.parquet(path).schema
+        return (self.spark.readStream.schema(schema)
+                .option("basePath", path).parquet(path))
+
+    # ------------------------------------------------------------ DWS
+    def run_visitor_stats_streaming(self) -> None:
+        """VisitorStatsApp: 3-stream union behind one watermark (O7 —
+        Spark tracks the min watermark across inputs), additive window
+        reduce in append mode. Only watermark-closed windows are
+        emitted."""
+        page_static = self.spark.read.parquet(self._p("dwd", "log_page"))
+        unioned = gmall_dws.visitor_stats_union(
+            self.page_stream(),
+            self._parquet_stream(self._p("dwd", "dwm_unique_visit"))
+                .select("mid", "ts"),
+            self._parquet_stream(self._p("dwd", "dwm_user_jump"))
+                .select("mid", "ts"),
+            gmall_dws.mid_dimensions(page_static))
+        self._drain_to(gmall_dws.visitor_stats_agg(unioned),
+                       self._p("dws", "visitor_stats_stream"), "vs_stream")
 
     def run_product_stats_streaming(self) -> None:
-        """ProductStatsApp as a true streaming job: the 8 source
-        streams unioned behind one watermark, set-based distinct order
-        counts, append-mode window reduce → dws table."""
-        from ..operators.gmall_dws import product_stats
-
-        page = self.page_stream()
-        display = self._parquet_stream(self._p("dwd", "log_display")) \
-            .drop("batch_id")
-        stats = product_stats(
-            page=page, display=display,
+        """ProductStatsApp: the 8 source streams unioned behind one
+        watermark, set-based distinct order counts, append-mode window
+        reduce. Dim enrichment happens at read time (trademark_top)."""
+        stats = gmall_dws.product_stats(
+            page=self.page_stream(),
+            display=self._parquet_stream(self._p("dwd", "log_display"))
+                .drop("batch_id"),
             favor=self.typed_fact_stream("favor_info"),
             cart=self.typed_fact_stream("cart_info"),
             order_wide=self._parquet_stream(
@@ -349,123 +337,27 @@ class Warehouse:
             payment_wide=self._parquet_stream(
                 self._p("dwd", "dwm_payment_wide")).drop("batch_id"),
             refund=self.typed_fact_stream("order_refund_info"),
-            comment=self.typed_fact_stream("comment_info"),
-            streaming_watermark="1 second",
-            approx_distinct=self.approx_distinct)
-        q = (stats.writeStream.foreachBatch(
-                lambda b, i: sinks.write_idempotent(
-                    b, i, self._p("dws", "product_stats_stream")))
-             .option("checkpointLocation", self._p("ck", "ps_stream"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
-    # ------------------------------------------------------------ DWS
-    def run_visitor_stats(self) -> None:
-        """VisitorStatsApp over the split page topic + DWM streams."""
-        from ..operators.gmall_dws import visitor_stats
-
-        page = self.spark.read.parquet(self._p("dwd", "log_page"))
-        uv = self.spark.read.parquet(self._p("dwd", "dwm_unique_visit"))
-        uj = (self.spark.read.parquet(self._p("dwd", "dwm_user_jump"))
-              .withColumnRenamed("ts", "ts"))
-        stats = visitor_stats(page, uv.select("mid", "ts"),
-                              uj.select("mid", "ts"))
-        stats.write.mode("overwrite").parquet(
-            self._p("dws", "visitor_stats"))
-
-    def _parquet_stream(self, path: str) -> DataFrame:
-        schema = self.spark.read.parquet(path).schema
-        return (self.spark.readStream.schema(schema)
-                .option("basePath", path).parquet(path))
-
-    def run_visitor_stats_streaming(self) -> None:
-        """VisitorStatsApp as a true streaming job: 3-stream union
-        behind one watermark (O7 — Spark tracks the min watermark
-        across inputs), additive window reduce in append mode. Only
-        watermark-closed windows are emitted; the batch
-        run_visitor_stats covers the tail."""
-        from ..operators.gmall_dws import (
-            mid_dimensions, visitor_stats_agg, visitor_stats_union)
-
-        page_static = self.spark.read.parquet(self._p("dwd", "log_page"))
-        mid_dims = mid_dimensions(page_static)
-        unioned = visitor_stats_union(
-            self.page_stream(),
-            self._parquet_stream(self._p("dwd", "dwm_unique_visit"))
-                .select("mid", "ts"),
-            self._parquet_stream(self._p("dwd", "dwm_user_jump"))
-                .select("mid", "ts"),
-            mid_dims)
-        stats = visitor_stats_agg(
-            unioned.withColumn("et", F.col("et").cast("timestamp"))
-                   .withWatermark("et", "1 second"))
-        q = (stats.writeStream.foreachBatch(
-                lambda b, i: sinks.write_idempotent(
-                    b, i, self._p("dws", "visitor_stats_stream")))
-             .option("checkpointLocation", self._p("ck", "vs_stream"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
-    def run_product_stats(self) -> None:
-        """ProductStatsApp: 7-source union windows → dws table."""
-        from ..operators.gmall_dws import enrich_product_stats, product_stats
-
-        page = self.spark.read.parquet(self._p("dwd", "log_page"))
-        display_raw = self.spark.read.parquet(
-            self._p("dwd", "log_display"))
-        order_wide = self.spark.read.parquet(
-            self._p("dwd", "dwm_order_wide"))
-        pay = self.typed_fact("payment_info")
-        pw = gmall_dwm.payment_wide_join(pay, order_wide)
-        stats = product_stats(
-            page=page, display=display_raw,
-            favor=self.typed_fact("favor_info"),
-            cart=self.typed_fact("cart_info"),
-            order_wide=order_wide, payment_wide=pw,
-            refund=self.typed_fact("order_refund_info"),
-            comment=self.typed_fact("comment_info"),
-            approx_distinct=self.approx_distinct)
-        dims = self.dims()
-        enrich_product_stats(stats, dims).write.mode("overwrite") \
-            .parquet(self._p("dws", "product_stats"))
+            comment=self.typed_fact_stream("comment_info"))
+        self._drain_to(stats, self._p("dws", "product_stats_stream"),
+                       "ps_stream")
 
     def run_keyword_stats_streaming(self) -> None:
-        """KeywordStatsApp as a streaming job: good_list search phrases
-        tokenized and window-counted behind a watermark (the U1
-        tokenizer explode feeding an A5 tumble window)."""
-        from ..functions.text import tokens
-        from ..functions.timeutil import window_stamps
-
-        page = (self.page_stream()
-                .withColumn("et", F.timestamp_millis("ts"))
-                .withWatermark("et", "1 second"))
-
-        searches = page.filter(
-            (F.col("page.page_id") == "good_list")
-            & (F.col("page.item_type") == "keyword")
-            & F.col("page.item").isNotNull())
-        words = searches.select(
-            "et", F.explode(tokens(F.lower(F.col("page.item"))))
-            .alias("keyword"))
-        stats = (words.groupBy(F.window("et", "10 seconds"), "keyword")
-                 .agg(F.count(F.lit(1)).alias("ct"))
-                 .select(*window_stamps(), "keyword", "ct"))
-        q = (stats.writeStream.foreachBatch(
-                lambda b, i: sinks.write_idempotent(
-                    b, i, self._p("dws", "keyword_stats_stream")))
-             .option("checkpointLocation", self._p("ck", "kw_stream"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        """KeywordStatsApp: good_list search phrases tokenized and
+        window-counted behind a watermark (the U1 tokenizer explode
+        feeding an A5 tumble window)."""
+        self._drain_to(gmall_dws.keyword_stats(self.page_stream()),
+                       self._p("dws", "keyword_stats_stream"), "kw_stream")
 
     def run_province_stats_streaming(self) -> None:
         """ProvinceStatsSqlApp as a streaming job over the enriched
         order-wide topic; the exact distinct order count uses
-        collect_set (streaming-legal, A4 semantics)."""
+        collect_set (streaming-legal, A4 semantics). Checked against
+        gmall_dws.province_stats_sql."""
         ow = (self._parquet_stream(self._p("dwd", "dwm_order_wide"))
               .drop("batch_id")
-              .withWatermark("order_et", "1 second"))
+              .withWatermark("order_et", gmall_dws.WATERMARK))
         stats = (ow.groupBy(
-                    F.window("order_et", "10 seconds"),
+                    F.window("order_et", gmall_dws.WINDOW),
                     "province_id", "province_name", "province_area_code",
                     "province_iso_code", "province_3166_2_code")
                  .agg(F.sum(F.col("split_total_amount")
@@ -479,32 +371,42 @@ class Warehouse:
                          "province_area_code", "province_iso_code",
                          "province_3166_2_code", "order_amount",
                          "order_count"))
-        q = (stats.writeStream.foreachBatch(
-                lambda b, i: sinks.write_idempotent(
-                    b, i, self._p("dws", "province_stats_stream")))
-             .option("checkpointLocation", self._p("ck", "prov_stream"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        self._drain_to(stats, self._p("dws", "province_stats_stream"),
+                       "prov_stream")
 
     # ------------------------------------------------------------ serving
-    def gmv(self, date: str):
-        from ..operators.gmall_dws import gmv
+    def _product_stats(self) -> DataFrame:
+        return self.spark.read.parquet(
+            self._p("dws", "product_stats_stream")).drop("batch_id")
 
-        return gmv(self.spark.read.parquet(
-            self._p("dws", "product_stats")), date)
+    def gmv(self, date: str) -> DataFrame:
+        """GMV for one day (ProductStatsMapper.java:13-14) from
+        product_stats_stream, the table the dashboards read. Like the
+        reference's ClickHouse table it holds only watermark-closed
+        windows, so the answer covers events up to the product-stats
+        watermark, not the last event ingested."""
+        return gmall_dws.gmv(self._product_stats(), date)
 
-    def trademark_top(self, date: str, limit: int = 5):
-        from ..operators.gmall_dws import trademark_top
-
-        return trademark_top(self.spark.read.parquet(
-            self._p("dws", "product_stats")), date, limit)
+    def trademark_top(self, date: str, limit: int = 5) -> DataFrame:
+        """Trademark top-N by order amount (ProductStatsMapper.java:21)
+        from product_stats_stream (watermark-closed windows, as in
+        gmv), enriched at read time with the sku/spu/trademark/
+        category3 dims as the dashboards do."""
+        dims = {n: self.dim(f"dim_{n}") for n in
+                ("sku_info", "spu_info", "base_trademark",
+                 "base_category3")}
+        return gmall_dws.trademark_top(
+            gmall_dws.enrich_product_stats(self._product_stats(), dims),
+            date, limit)
 
     # ------------------------------------------------------------ one shot
     def run_all(self) -> None:
-        self.run_base_db()
-        self.run_base_log()
-        self.run_unique_visitors()
-        self.run_user_jumps()
-        self.run_order_wide()
-        self.run_visitor_stats()
-        self.run_product_stats()
+        """Every streaming job once, in dependency order: each reads
+        only tables the jobs before it write."""
+        for job in ("run_base_db", "run_base_log", "run_unique_visitors",
+                    "run_user_jumps", "run_order_wide", "run_payment_wide",
+                    "run_visitor_stats_streaming",
+                    "run_product_stats_streaming",
+                    "run_keyword_stats_streaming",
+                    "run_province_stats_streaming"):
+            getattr(self, job)()

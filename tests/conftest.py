@@ -1,41 +1,8 @@
 import os
-import sys
 
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-
-# transformWithState needs a google.protobuf runtime (its state-server
-# wire format). The container has none installed, but the gcloud
-# appengine bundle ships a working 6.32 — vendored via symlink under
-# .pb_vendor (see .pb_vendor/sitecustomize.py for the version-check
-# shim). Wire it into THIS process (sys.path + shim) and into the
-# Spark python workers (PYTHONPATH → site auto-imports the shim).
-_PB_VENDOR = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), ".pb_vendor")
-# The machine-specific symlink is created HERE at session start (and
-# gitignored), never committed: on any machine without the gcloud
-# bundle the link is simply absent and the e2e test skips itself.
-_PB_SRC = ("/usr/lib/google-cloud-sdk/platform/google_appengine"
-           "/google/protobuf")
-try:
-    from google.protobuf import descriptor as _pb_probe  # noqa: F401
-except ImportError:
-    _link = os.path.join(_PB_VENDOR, "google", "protobuf")
-    if not os.path.islink(_link) and os.path.isdir(_PB_SRC):
-        os.makedirs(os.path.dirname(_link), exist_ok=True)
-        os.symlink(_PB_SRC, _link)
-    if os.path.isdir(os.path.join(_PB_VENDOR, "google", "protobuf")):
-        sys.path.insert(0, _PB_VENDOR)
-        try:
-            from google.protobuf import descriptor  # noqa: F401
-            import sitecustomize  # noqa: F401  (apply the shim here too)
-
-            os.environ["PYTHONPATH"] = (
-                _PB_VENDOR + os.pathsep
-                + os.environ.get("PYTHONPATH", ""))
-        except ImportError:
-            sys.path.remove(_PB_VENDOR)
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"

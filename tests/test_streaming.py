@@ -658,24 +658,6 @@ def test_pq_encoding_streaming_matches_batch(spark, tmp_path):
     assert want and got == want
 
 
-def test_native_watermarked_dedup_matches_batch_distinct(spark, tmp_path):
-    """The engine-managed dedup operator (dropDuplicatesWithinWatermark)
-    must emit exactly the batch DISTINCT (day, user_id) set — the
-    native-state counterpart of the explicit-TTL UV dedup."""
-    from gmall_flink_2021_spark.streaming.jobs import uv_native_dedup_stream
-
-    stream = read_events_stream(spark, SF_SMOKE)
-    out = run_to_completion(uv_native_dedup_stream(stream),
-                            str(tmp_path / "ck_uvnative"))
-    got = {tuple(r) for r in out.collect()}
-
-    events = load_table(spark, SF_SMOKE, "events")
-    want = {tuple(r) for r in
-            events.select(F.date_format("ts", "yyyy-MM-dd").alias("day"),
-                          "user_id").distinct().collect()}
-    assert want and got == want
-
-
 def test_observed_metrics_reconcile_with_sink_counts(spark, tmp_path):
     """The observe() row-audit must report, per micro-batch, exactly
     the rows the sink received — in-flight reconciliation with no
@@ -776,49 +758,6 @@ def test_codebook_persistence_roundtrip_encodes_identically(spark, tmp_path):
         pq_encode_stream(stream2, reloaded),
         str(tmp_path / "ck_b")).collect()}
     assert a and a == b
-
-
-def test_transform_with_state_dedup_matches_batch_distinct(spark, tmp_path):
-    """The Spark 4 StatefulProcessor form of the UV dedup must emit
-    exactly the batch DISTINCT (day, user_id) set — same contract as
-    the explicit-TTL and engine-managed forms. The transformWithState
-    protocol needs a working protobuf runtime (its state-server wire
-    format) — conftest vendors one from the gcloud bundle where the
-    container ships none — and the RocksDB state store provider
-    (column families; the default HDFS-backed provider refuses),
-    which is the provider a production transformWithState deployment
-    runs anyway."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf unavailable: "
-                    "transformWithState state server cannot start")
-    from gmall_flink_2021_spark.streaming.jobs import uv_tws_stream
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    try:
-        stream = read_events_stream(spark, SF_SMOKE)
-        out = run_to_completion(uv_tws_stream(stream),
-                                str(tmp_path / "ck_tws"))
-        got = {tuple(r) for r in out.collect()}
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-
-    events = load_table(spark, SF_SMOKE, "events")
-    want = {tuple(r) for r in
-            events.select(F.date_format("ts", "yyyy-MM-dd").alias("day"),
-                          "user_id").distinct().collect()}
-    assert want and got == want
 
 
 def test_quality_gate_quarantines_poisoned_batch(spark, tmp_path):
@@ -986,53 +925,6 @@ def test_checkpoint_resume_continues_from_offset(spark, tmp_path):
     want = {tuple(map(str, r)) for r in batch_out.collect()}
     bh.unpersist()
     assert want and got == want
-
-
-def test_first_visit_processor_logic_without_state_server():
-    """Pure-Python fallback check for the Spark-4 StatefulProcessor UV
-    dedup (VERDICT r3 task 8): the end-to-end transformWithState test
-    skips in sandboxes with a broken protobuf (the state-server wire
-    format), so the per-key first-visit logic is driven here directly
-    with a fake state handle — first arrival per (day, user) emits,
-    every later arrival (same or later micro-batch) is swallowed."""
-    from gmall_flink_2021_spark.streaming.jobs import first_visit_processor
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema):
-            return self.states.setdefault(name, FakeValueState())
-
-    FirstVisit = first_visit_processor()
-
-    emitted = []
-    # one processor instance per key, as the engine partitions state
-    procs: dict = {}
-    for key, n_rows in [(("2024-01-01", 10), 3),
-                        (("2024-01-01", 10), 2),   # replayed key: silent
-                        (("2024-01-01", 20), 1),
-                        (("2024-01-02", 10), 1)]:  # new day: new key
-        p = procs.get(key)
-        if p is None:
-            p = procs[key] = FirstVisit()
-            p.init(FakeHandle())
-        for df in p.handleInputRows(key, iter([object()] * n_rows), None):
-            emitted.extend(
-                (d, u) for d, u in zip(df["day"], df["user_id"]))
-        p.close()
-    assert emitted == [("2024-01-01", 10), ("2024-01-01", 20),
-                       ("2024-01-02", 10)]
 
 
 def test_compaction_recovers_interrupted_republish(spark, tmp_path):
@@ -1278,6 +1170,32 @@ def test_dsir_streaming_matches_batch(spark, tmp_path):
     want = {tuple(r)
             for r in textstats.dsir_importance_weights(docs).collect()}
     assert want and got == want
+
+
+def test_failed_stream_releases_its_persisted_index(spark, tmp_path):
+    """A job that persists a static helper frame (dsir's llr table)
+    must release it when its query fails, not only on success: the
+    sink's write lands under a regular file, so the first micro-batch
+    raises, and the session's persisted-RDD count is back where it
+    was."""
+    from gmall_flink_2021_spark.streaming.jobs import dsir_score_stream
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    src = str(tmp_path / "docs_dsir_fail")
+    docs.write.parquet(src)
+    stream = spark.readStream.schema(docs.schema).parquet(src)
+    blocker = tmp_path / "not_a_dir"
+    blocker.write_text("")
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    before = persisted()
+    with pytest.raises(Exception):
+        dsir_score_stream(stream, docs, str(blocker / "out"),
+                          str(tmp_path / "ck_dsir_fail"))
+    assert persisted() == before
+    assert not spark.streams.active
 
 
 def test_bpe_encode_streaming_matches_batch(spark, tmp_path):

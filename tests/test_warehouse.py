@@ -1,139 +1,147 @@
 """The composed warehouse topology end-to-end: ODS files in, serving
 answers out, everything through the streaming jobs."""
 
+import datetime
 import os
+from functools import reduce
 
+import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gmall_flink_2021_spark.sources import cdc as cdc_src
 from gmall_flink_2021_spark.sources import gmall_fixtures as fx
+from gmall_flink_2021_spark.streaming import sinks
 from gmall_flink_2021_spark.streaming.warehouse import Warehouse
 
 
-def test_warehouse_end_to_end(spark, tmp_path):
-    work = str(tmp_path / "wh")
-    # default = exact reference-parity mode: every streaming==batch
-    # comparison below is bit-exact. The opt-in constant-state 100 TB
-    # posture (approx_distinct=True) is covered by
-    # test_warehouse_approx_distinct_within_band.
-    wh = Warehouse(spark, work, fx.table_process_rows())
-    assert wh.approx_distinct is False  # documented parity default
+def _closed(df, horizon) -> set:
+    return {tuple(r) for r in df.filter(F.col("edt") <= horizon).collect()}
+
+
+def _load_fixture(work: str) -> None:
     cdc_src.write_changelog_fixture(fx.cdc_rows(),
                                     os.path.join(work, "ods_db"))
     with open(os.path.join(work, "ods_log", "log-0.txt"), "w") as f:
         f.write("\n".join(fx.page_log_lines()))
 
+
+def test_warehouse_end_to_end(spark, tmp_path):
+    work = str(tmp_path / "wh")
+    wh = Warehouse(spark, work, fx.table_process_rows())
+    _load_fixture(work)
+
     wh.run_all()
+    assert not spark.streams.active
+
+    def read(*parts):
+        return spark.read.parquet(os.path.join(work, *parts)) \
+                    .drop("batch_id")
 
     # dims materialized and merged
     assert wh.dim("dim_sku_info").count() == 9
     assert wh.dim("dim_base_trademark").count() == 3
     # DWD topics exist with expected shapes
-    assert spark.read.parquet(
-        os.path.join(work, "dwd", "log_page")).count() > 0
-    assert spark.read.parquet(
-        os.path.join(work, "dwd", "dirty")).count() > 0
+    page = read("dwd", "log_page")
+    assert page.count() > 0
+    assert read("dwd", "dirty").count() > 0
     # DWM wide table enriched
-    ow = spark.read.parquet(os.path.join(work, "dwd", "dwm_order_wide"))
+    ow = read("dwd", "dwm_order_wide")
     assert ow.count() == 15
     assert ow.filter(F.col("tm_name").isNull()).count() == 0
     # stateful outputs landed
-    assert spark.read.parquet(
-        os.path.join(work, "dwd", "dwm_unique_visit")).count() > 0
-    # DWS stats + serving answers
-    vs = spark.read.parquet(os.path.join(work, "dws", "visitor_stats"))
-    assert vs.agg(F.sum("pv_ct")).collect()[0][0] == spark.read.parquet(
-        os.path.join(work, "dwd", "log_page")).count()
-    g = wh.gmv("20200913").collect()[0].gmv
-    assert g is not None and float(g) > 0
+    uv = read("dwd", "dwm_unique_visit")
+    uj = read("dwd", "dwm_user_jump")
+    assert uv.count() > 0
+
+    # every DWS stream table equals its gmall_dws batch recomputation
+    # on every watermark-closed window (edt <= max event time - 1 s)
+    from gmall_flink_2021_spark.operators import gmall_dws
+
+    sec = datetime.timedelta(seconds=1)
+    batch_vs = gmall_dws.visitor_stats(page, uv.select("mid", "ts"),
+                                       uj.select("mid", "ts"))
+    assert batch_vs.agg(F.sum("pv_ct")).collect()[0][0] == page.count()
+    page_max = page.agg(F.max(F.timestamp_millis("ts"))).collect()[0][0]
+    want = _closed(batch_vs, page_max - sec)
+    assert want and _closed(read("dws", "visitor_stats_stream"),
+                            page_max - sec) == want
+
+    # streaming PaymentWide + ProductStats (topic-to-topic chaining)
+    pw = read("dwd", "dwm_payment_wide")
+    facts = {t: wh.typed_fact(t) for t in
+             ("favor_info", "cart_info", "order_refund_info",
+              "comment_info")}
+    display = read("dwd", "log_display")
+    batch_ps = gmall_dws.product_stats(
+        page=page, display=display, favor=facts["favor_info"],
+        cart=facts["cart_info"], order_wide=ow, payment_wide=pw,
+        refund=facts["order_refund_info"], comment=facts["comment_info"])
+    assert pw.count() == batch_ps.agg(
+        F.sum("paid_order_ct")).collect()[0][0]
+    # the watermark tracks the max event time reaching the window
+    # operator (the union of the 8 sources), not the page max
+    ts = F.to_timestamp("create_time")
+    union_max = reduce(DataFrame.unionByName, [
+        page.filter(F.col("page.page_id") == "good_detail")
+            .select(F.timestamp_millis("ts").alias("et")),
+        display.filter(F.col("item_type") == "sku_id")
+               .select(F.timestamp_millis("ts").alias("et")),
+        ow.select(F.col("order_et").alias("et")),
+        pw.select(F.col("payment_et").alias("et")),
+        *[f.select(ts.alias("et")) for f in facts.values()],
+    ]).agg(F.max("et")).collect()[0][0]
+    horizon = union_max - sec
+    stream_ps = read("dws", "product_stats_stream")
+    wantp = _closed(batch_ps, horizon)
+    assert wantp and _closed(stream_ps, horizon) == wantp
+
+    # serving reads product_stats_stream: it answers exactly what the
+    # batch stats restricted to closed windows answer
+    closed_ps = batch_ps.filter(F.col("edt") <= horizon)
+    g = wh.gmv("20200913").collect()
+    assert g == gmall_dws.gmv(closed_ps, "20200913").collect()
+    assert g[0].gmv is not None and float(g[0].gmv) > 0
     top = wh.trademark_top("20200913").collect()
+    dims = {n: wh.dim(f"dim_{n}") for n in
+            ("sku_info", "spu_info", "base_trademark", "base_category3")}
+    assert top == gmall_dws.trademark_top(
+        gmall_dws.enrich_product_stats(closed_ps, dims),
+        "20200913").collect()
     assert top and top[0].tm_name in {"tm-a", "tm-b", "tm-c"}
 
-    # streaming DWS: the true streaming visitor-stats job must agree
-    # with the batch job on every watermark-closed window
-    wh.run_visitor_stats_streaming()
-    stream_vs = spark.read.parquet(
-        os.path.join(work, "dws", "visitor_stats_stream")).drop("batch_id")
-    page = spark.read.parquet(os.path.join(work, "dwd", "log_page"))
-    import datetime
-
-    max_et = page.agg(F.max(F.timestamp_millis("ts"))).collect()[0][0]
-    horizon = max_et - datetime.timedelta(seconds=1)
-    want = {tuple(r) for r in vs.filter(F.col("edt") <= horizon).collect()}
-    got = {tuple(r) for r in
-           stream_vs.filter(F.col("edt") <= horizon).collect()}
-    assert want and got == want
-
-    # streaming PaymentWide + ProductStats (topic-to-topic chaining):
-    # closed windows must agree with the batch ProductStats job
-    wh.run_payment_wide()
-    wh.run_product_stats_streaming()
-    pw = spark.read.parquet(os.path.join(work, "dwd", "dwm_payment_wide"))
-    assert pw.count() == spark.read.parquet(
-        os.path.join(work, "dws", "product_stats")).agg(
-        F.sum("paid_order_ct")).collect()[0][0]
-    from gmall_flink_2021_spark.operators import gmall_dwm, gmall_dws
-
-    batch_ps = gmall_dws.product_stats(
-        page=page, display=spark.read.parquet(
-            os.path.join(work, "dwd", "log_display")),
-        favor=wh.typed_fact("favor_info"),
-        cart=wh.typed_fact("cart_info"),
-        order_wide=ow.drop("batch_id"),
-        payment_wide=pw.drop("batch_id"),
-        refund=wh.typed_fact("order_refund_info"),
-        comment=wh.typed_fact("comment_info"))
-    stream_ps = spark.read.parquet(
-        os.path.join(work, "dws", "product_stats_stream")).drop("batch_id")
-    # the watermark tracks the max event time reaching the window
-    # operator (post-filter union of the 8 sources), not the page max
-    union_times = [
-        wh.typed_fact("comment_info").agg(
-            F.max(F.to_timestamp("create_time"))).collect()[0][0],
-        wh.typed_fact("order_refund_info").agg(
-            F.max(F.to_timestamp("create_time"))).collect()[0][0],
-        pw.agg(F.max("payment_et")).collect()[0][0],
-        page.filter(F.col("page.page_id") == "good_detail").agg(
-            F.max(F.timestamp_millis("ts"))).collect()[0][0],
-    ]
-    union_max = max(t for t in union_times if t is not None)
-    horizon2 = union_max - datetime.timedelta(seconds=1)
-    wantp = {tuple(r) for r in
-             batch_ps.filter(F.col("edt") <= horizon2).collect()}
-    gotp = {tuple(r) for r in
-            stream_ps.filter(F.col("edt") <= horizon2).collect()}
-    assert wantp and gotp == wantp
-
-    # streaming KeywordStats + ProvinceStats (the remaining DWS jobs)
-    wh.run_keyword_stats_streaming()
-    wh.run_province_stats_streaming()
-    kw = spark.read.parquet(
-        os.path.join(work, "dws", "keyword_stats_stream"))
-    batch_kw = gmall_dws.keyword_stats(page)
+    # streaming KeywordStats + ProvinceStats
     kmax = page.filter(F.col("page.page_id") == "good_list").agg(
         F.max(F.timestamp_millis("ts"))).collect()[0][0]
-    kh = kmax - datetime.timedelta(seconds=1)
-    assert ({tuple(r) for r in kw.drop("batch_id")
-             .filter(F.col("edt") <= kh).collect()}
-            == {tuple(r) for r in batch_kw
-                .filter(F.col("edt") <= kh).collect()})
-    prov = spark.read.parquet(
-        os.path.join(work, "dws", "province_stats_stream"))
-    batch_prov = gmall_dws.province_stats_sql(spark, ow.drop("batch_id"))
+    assert (_closed(read("dws", "keyword_stats_stream"), kmax - sec)
+            == _closed(gmall_dws.keyword_stats(page), kmax - sec))
     omax = ow.agg(F.max("order_et")).collect()[0][0]
-    oh = omax - datetime.timedelta(seconds=1)
-    assert ({tuple(r) for r in prov.drop("batch_id")
-             .filter(F.col("edt") <= oh).collect()}
-            == {tuple(r) for r in batch_prov
-                .filter(F.col("edt") <= oh).collect()})
+    assert (_closed(read("dws", "province_stats_stream"), omax - sec)
+            == _closed(gmall_dws.province_stats_sql(spark, ow),
+                       omax - sec))
 
     # idempotent re-run: same checkpoints, no new input → no duplicates
     before = ow.count()
     wh.run_base_db()
     wh.run_order_wide()
-    after = spark.read.parquet(
-        os.path.join(work, "dwd", "dwm_order_wide")).count()
-    assert after == before
+    assert read("dwd", "dwm_order_wide").count() == before
+
+
+def test_drain_reraises_sink_failure_and_leaves_no_query(spark, tmp_path):
+    """A sink that raises fails its query: sinks.drain re-raises the
+    error to the caller and no streaming query is left running."""
+    work = str(tmp_path / "wh_fail")
+    Warehouse(spark, work, fx.table_process_rows())
+    _load_fixture(work)
+    stream = spark.readStream.text(os.path.join(work, "ods_log"))
+
+    def sink(batch, bid):
+        raise RuntimeError("sink exploded")
+
+    with pytest.raises(Exception, match="sink exploded"):
+        sinks.drain(stream, sink, os.path.join(work, "ck", "fail"))
+    assert not spark.streams.active
+
 
 def test_dim_tables_are_config_driven(spark, tmp_path):
     """K4 runtime DDL + broadcast-state semantics: a table_process row
@@ -221,60 +229,3 @@ def test_dim_tables_are_config_driven(spark, tmp_path):
     row = mat.collect()[0]
     assert (row["id"], row["material_name"], row["extra"]) \
         == (3, "cotton", "kept")
-
-
-def test_warehouse_approx_distinct_within_band(spark, tmp_path):
-    """The OPT-IN 100 TB deployment posture is the constant-state
-    path: approx_distinct=True swaps the per-window distinct order
-    sets for HyperLogLog++ counters (the default stays exact for
-    reference parity). Gate: against the exact batch ProductStats
-    every summed metric must be identical (approximation touches ONLY
-    the distinct counts) and each distinct count must sit inside the
-    approx_count_distinct band (rsd 5% ⇒ ~3σ = 15%, with the ±2
-    absolute floor for tiny groups — the same combined band as
-    test_windowed_approx_uv_within_band)."""
-    from gmall_flink_2021_spark.operators import gmall_dws
-
-    work = str(tmp_path / "wh_approx")
-    wh = Warehouse(spark, work, fx.table_process_rows(),
-                   approx_distinct=True)
-    assert wh.approx_distinct is True
-    cdc_src.write_changelog_fixture(fx.cdc_rows(),
-                                    os.path.join(work, "ods_db"))
-    with open(os.path.join(work, "ods_log", "log-0.txt"), "w") as f:
-        f.write("\n".join(fx.page_log_lines()))
-    wh.run_base_db()
-    wh.run_base_log()
-    wh.run_order_wide()
-    wh.run_payment_wide()
-    wh.run_product_stats_streaming()
-
-    page = spark.read.parquet(os.path.join(work, "dwd", "log_page"))
-    ow = spark.read.parquet(
-        os.path.join(work, "dwd", "dwm_order_wide")).drop("batch_id")
-    pw = spark.read.parquet(
-        os.path.join(work, "dwd", "dwm_payment_wide")).drop("batch_id")
-    exact = gmall_dws.product_stats(
-        page=page,
-        display=spark.read.parquet(os.path.join(work, "dwd", "log_display")),
-        favor=wh.typed_fact("favor_info"),
-        cart=wh.typed_fact("cart_info"),
-        order_wide=ow, payment_wide=pw,
-        refund=wh.typed_fact("order_refund_info"),
-        comment=wh.typed_fact("comment_info"))
-    got = spark.read.parquet(
-        os.path.join(work, "dws", "product_stats_stream")).drop("batch_id")
-
-    approx_cols = {"order_ct", "paid_order_ct", "refund_order_ct"}
-    key = ["stt", "sku_id"]
-    want_rows = {(str(r["stt"]), r["sku_id"]): r for r in exact.collect()}
-    got_rows = got.collect()
-    assert got_rows, "streaming job emitted no closed windows"
-    for r in got_rows:
-        w = want_rows[(str(r["stt"]), r["sku_id"])]
-        for f in exact.columns:
-            if f in approx_cols:
-                assert abs(r[f] - w[f]) <= max(0.15 * w[f], 2.0), \
-                    (f, r["sku_id"], r[f], w[f])
-            else:
-                assert str(r[f]) == str(w[f]), (f, r["sku_id"])
