@@ -20,6 +20,8 @@ Reference parity:
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -107,3 +109,35 @@ def project_sink_columns(routed: DataFrame, sink_table: str,
         F.get_json_object(F.col(data_col), f"$.{c}").alias(c)
         for c in columns]
     return rows.select(*cols)
+
+
+def sink_column_list(rows: DataFrame, sink_table: str,
+                     sink_columns: str | None,
+                     pk: str) -> list[str] | None:
+    """The columns P3 projects for one dim spec's ``rows``: the
+    configured comma list, or — for a spec with no list, whose records
+    the reference keeps unfiltered (TableProcessFunction.java:62-68) —
+    the key names found in the JSON payloads (a DataFrame-only
+    json_object_keys scan, no .rdd hop). The dim merge needs ``pk``
+    projected: a list that omits it gets it appended with a warning
+    (the reference tolerates malformed table_process rows), and
+    payloads that lack it return None with a warning, since merging
+    on an all-null key would collapse the table."""
+    if sink_columns:
+        cols = [c.strip() for c in sink_columns.split(",")]
+        if pk not in cols:
+            warnings.warn(
+                f"dim spec for {sink_table}: sink_pk '{pk}' missing "
+                "from sink_columns; appending it",
+                RuntimeWarning, stacklevel=2)
+            cols.append(pk)
+        return cols
+    cols = sorted(r.k for r in rows.select(
+        F.explode(F.json_object_keys("data")).alias("k"))
+        .distinct().collect())
+    if pk not in cols:
+        warnings.warn(
+            f"skipping dim spec for {sink_table}: sink_pk '{pk}' absent "
+            "from the JSON payload", RuntimeWarning, stacklevel=2)
+        return None
+    return cols

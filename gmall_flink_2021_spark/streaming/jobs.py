@@ -20,6 +20,8 @@ Every foreachBatch job here runs through ``sinks.drain``;
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -128,36 +130,41 @@ def uv_sketch_stream(events_stream: DataFrame, store_path: str,
     batch id ≤ the stored one is a no-op."""
     from ..operators.dwm import uv_daily_sketches
 
-    spark = events_stream.sparkSession
-
     def sink(batch: DataFrame, bid: int) -> None:
-        sinks.recover_store(store_path)
-        try:
-            existing = spark.read.parquet(store_path)
-        except Exception:
-            existing = None
-        if existing is not None:
-            prior_bid = existing.agg(F.max("merged_bid")).first()[0]
-            if prior_bid is None:
-                raise RuntimeError(
-                    f"uv-sketch store {store_path} is corrupt (no "
-                    "merged_bid); restore or delete the store to "
-                    "re-seed")
-            if bid <= prior_bid:
-                return  # replayed batch: already merged, atomically
-        daily = uv_daily_sketches(batch)
-        if existing is not None:
-            merged = (existing.drop("merged_bid").unionByName(daily)
-                      .groupBy("day")
-                      .agg(F.hll_union_agg("sk").alias("sk"),
-                           F.sum("pv_ct").alias("pv_ct")))
-        else:
-            merged = daily
-        sinks.publish_store(
-            merged.withColumn("merged_bid", F.lit(bid).cast("long")),
-            store_path)
+        _merge_into_store(
+            uv_daily_sketches(batch), store_path, bid, "uv-sketch",
+            lambda rows: rows.groupBy("day").agg(
+                F.hll_union_agg("sk").alias("sk"),
+                F.sum("pv_ct").alias("pv_ct")))
 
     sinks.drain(events_stream, sink, checkpoint)
+
+
+def _merge_into_store(partial: DataFrame, store_path: str, bid: int,
+                      label: str, combine) -> None:
+    """Merge batch ``bid``'s ``partial`` frame into the merged store at
+    ``store_path`` (``combine`` aggregates the union of the two), stamp
+    it with ``merged_bid`` and publish it by rename. The store is
+    recovered first; a batch id at or below the stored ``merged_bid``
+    is a replay already merged, so it is a no-op; a store without
+    merged_bid fails loud instead of re-seeding silently."""
+    spark = partial.sparkSession
+    sinks.recover_store(store_path)
+    fs, P = sinks.store_fs(spark, store_path)
+    merged = partial
+    if fs.exists(P(store_path)):
+        existing = spark.read.parquet(store_path)
+        prior_bid = existing.agg(F.max("merged_bid")).first()[0]
+        if prior_bid is None:
+            raise RuntimeError(
+                f"{label} store {store_path} is corrupt (no "
+                "merged_bid); restore or delete the store to re-seed")
+        if bid <= prior_bid:
+            return  # replayed batch: already merged, atomically
+        merged = combine(existing.drop("merged_bid").unionByName(partial))
+    sinks.publish_store(
+        merged.withColumn("merged_bid", F.lit(bid).cast("long")),
+        store_path)
 
 
 def contamination_stream(corpus_stream: DataFrame, bench_index: DataFrame,
@@ -228,17 +235,19 @@ def segment_dedup_stream(doc_stream: DataFrame, out_path: str,
         # cross-batch dedup. Existence is probed via the Hadoop
         # FileSystem API so hdfs:// and s3a:// state paths work, not
         # just the driver's local POSIX filesystem.
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(state_path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(jpath):
+        fs, P = sinks.store_fs(spark, state_path)
+        if fs.exists(P(state_path)):
             seen = (spark.read.parquet(state_path)
                     .filter(F.col("batch_id") < bid)
                     .select("seg_hash"))
             kept = kept.join(seen, "seg_hash", "left_anti")
         kept = kept.persist()
-        sinks.write_idempotent(kept.select("seg_hash"), bid, state_path)
-        sinks.write_idempotent(segment_rebuild(kept), bid, out_path)
-        kept.unpersist()
+        try:
+            sinks.write_idempotent(kept.select("seg_hash"), bid,
+                                   state_path)
+            sinks.write_idempotent(segment_rebuild(kept), bid, out_path)
+        finally:
+            kept.unpersist()
 
     sinks.drain(doc_stream, sink, checkpoint)
 
@@ -299,31 +308,34 @@ def duplicate_spans_stream(doc_stream: DataFrame, out_path: str,
 
     def sink(batch: DataFrame, bid: int) -> None:
         spark = batch.sparkSession
+        fs, P = sinks.store_fs(spark, state_path)
         spans = span_hashes(batch).persist()
-        first = spans.groupBy("h").agg(F.min("doc_id").alias("first_doc"))
-        marked = spans.join(first, "h")
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(state_path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(jpath):
-            prior = (spark.read.parquet(state_path)
-                     .filter(F.col("batch_id") < bid)
-                     .select("h", F.lit(1).alias("seen")))
-            marked = marked.join(prior, "h", "left")
-        else:
-            prior = None
-            marked = marked.withColumn("seen", F.lit(None).cast("int"))
-        dup = (F.col("seen").isNotNull()
-               | (F.col("first_doc") < F.col("doc_id"))).cast("long")
-        per_doc = (marked.groupBy("doc_id")
-                   .agg(F.count(F.lit(1)).alias("total_spans"),
-                        F.sum(dup).alias("dup_spans"))
-                   .filter(F.col("dup_spans") > 0))
-        sinks.write_idempotent(per_doc, bid, out_path)
-        new_h = spans.select("h").distinct()
-        if prior is not None:
-            new_h = new_h.join(prior.select("h"), "h", "left_anti")
-        sinks.write_idempotent(new_h, bid, state_path)
-        spans.unpersist()
+        try:
+            first = spans.groupBy("h").agg(
+                F.min("doc_id").alias("first_doc"))
+            marked = spans.join(first, "h")
+            if fs.exists(P(state_path)):
+                prior = (spark.read.parquet(state_path)
+                         .filter(F.col("batch_id") < bid)
+                         .select("h", F.lit(1).alias("seen")))
+                marked = marked.join(prior, "h", "left")
+            else:
+                prior = None
+                marked = marked.withColumn("seen",
+                                           F.lit(None).cast("int"))
+            dup = (F.col("seen").isNotNull()
+                   | (F.col("first_doc") < F.col("doc_id"))).cast("long")
+            per_doc = (marked.groupBy("doc_id")
+                       .agg(F.count(F.lit(1)).alias("total_spans"),
+                            F.sum(dup).alias("dup_spans"))
+                       .filter(F.col("dup_spans") > 0))
+            sinks.write_idempotent(per_doc, bid, out_path)
+            new_h = spans.select("h").distinct()
+            if prior is not None:
+                new_h = new_h.join(prior.select("h"), "h", "left_anti")
+            sinks.write_idempotent(new_h, bid, state_path)
+        finally:
+            spans.unpersist()
 
     sinks.drain(doc_stream, sink, checkpoint)
 
@@ -390,36 +402,37 @@ def heavy_hitter_stream(doc_stream: DataFrame, store_path: str,
         bc = (batch.select(F.explode(tokens("text")).alias("term"))
               .groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
               .persist())
-        # batch token total from the aggregated (vocab-sized) frame —
-        # no second corpus-sized tokenize pass
-        n_batch = bc.agg(F.sum("cnt")).first()[0] or 0
-        if existing is not None:
-            merged = (existing.filter(~F.col("term").isin(TOTAL, MERGED))
-                      .unionByName(bc)
-                      .groupBy("term").agg(F.sum("cnt").alias("cnt")))
-        else:
+        try:
+            # batch token total from the aggregated (vocab-sized)
+            # frame — no second corpus-sized tokenize pass
+            n_batch = bc.agg(F.sum("cnt")).first()[0] or 0
             merged = bc
-        rows = merged.orderBy(F.desc("cnt"), F.asc("term")) \
-                     .limit(counters + 1).collect()
-        if len(rows) > counters:
-            sub = rows[-1]["cnt"]
-            merged = (merged.filter(F.col("cnt") > sub)
-                      .withColumn("cnt", F.col("cnt") - F.lit(sub)))
-        meta_rows = spark.createDataFrame(
-            [(TOTAL, n_prior + n_batch), (MERGED, bid)],
-            "term string, cnt long")
-        out = merged.unionByName(meta_rows)
-        sinks.publish_store(out, store_path)
-        bc.unpersist()
+            if existing is not None:
+                merged = (existing
+                          .filter(~F.col("term").isin(TOTAL, MERGED))
+                          .unionByName(bc)
+                          .groupBy("term").agg(F.sum("cnt").alias("cnt")))
+            rows = merged.orderBy(F.desc("cnt"), F.asc("term")) \
+                         .limit(counters + 1).collect()
+            if len(rows) > counters:
+                sub = rows[-1]["cnt"]
+                merged = (merged.filter(F.col("cnt") > sub)
+                          .withColumn("cnt", F.col("cnt") - F.lit(sub)))
+            meta_rows = spark.createDataFrame(
+                [(TOTAL, n_prior + n_batch), (MERGED, bid)],
+                "term string, cnt long")
+            sinks.publish_store(merged.unionByName(meta_rows), store_path)
+        finally:
+            bc.unpersist()
 
     sinks.drain(doc_stream, sink, checkpoint)
 
 
 def changelog_apply_stream(change_stream: DataFrame, table_path: str,
                            checkpoint: str, pk: str,
-                           order_col: str, op_col: str = "op") -> None:
+                           order_col: str) -> None:
     """CDC changelog replay (the S2/S3 → K4 chain end-to-end): a
-    stream of (op, seq, payload…) change rows is applied to a
+    stream of (op, ``order_col``, payload…) change rows is applied to a
     pk-bucketed parquet table — inserts/updates upsert, deletes
     remove — via the incremental copy-on-write merge in
     sinks.upsert_dim. Per-pk application is idempotent, so a replayed
@@ -437,7 +450,7 @@ def changelog_apply_stream(change_stream: DataFrame, table_path: str,
         if not batch.head(1):
             return
         sinks.upsert_dim(batch, table_path, pk=pk, order_col=order_col,
-                         op_col=op_col, transient_cols=(order_col,))
+                         op_col="op")
 
     sinks.drain(change_stream, sink, checkpoint)
 
@@ -463,61 +476,65 @@ def minhash_dedup_stream(doc_stream: DataFrame, out_path: str,
     bounded by corpus novelty, not corpus size."""
 
     def sink(batch: DataFrame, bid: int) -> None:
-        out, new_b, banded = _batch_dedup_marks(batch, bid, state_path)
-        sinks.write_idempotent(out, bid, out_path)
-        sinks.write_idempotent(new_b, bid, state_path)
-        banded.unpersist()
+        with _batch_dedup_marks(batch, bid, state_path) as (out, new_b):
+            sinks.write_idempotent(out, bid, out_path)
+            sinks.write_idempotent(new_b, bid, state_path)
 
     sinks.drain(doc_stream, sink, checkpoint)
 
 
+@contextmanager
 def _batch_dedup_marks(batch: DataFrame, bid: int, state_path: str):
-    """Shared per-batch body of the incremental MinHash dedup: returns
-    (marks, new_buckets, banded-cache-handle). marks = every batch doc
-    with is_dup/earliest_prior against the grow-only bucket index
-    (batches < bid) plus the batch's own earlier docs; new_buckets =
-    the index rows this batch contributes. Caller writes both
-    idempotently and unpersists the handle."""
+    """Shared per-batch body of the incremental MinHash dedup: yields
+    (marks, new_buckets). marks = every batch doc with
+    is_dup/earliest_prior against the grow-only bucket index (batches
+    < bid) plus the batch's own earlier docs; new_buckets = the index
+    rows this batch contributes. The caller writes both idempotently
+    inside the ``with``; the cached band frame is released on exit,
+    whether the writes succeeded or not."""
     from ..operators.dedup import banded_minhash
 
     spark = batch.sparkSession
+    fs, P = sinks.store_fs(spark, state_path)
     banded = banded_minhash(batch).persist()
-    bfirst = (banded.groupBy("band", "band_hash")
-              .agg(F.min("doc_id").alias("first_doc")))
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(state_path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jpath):
-        prior = (spark.read.parquet(state_path)
-                 .filter(F.col("batch_id") < bid)
-                 .select("band", "band_hash",
-                         F.col("first_doc").alias("prior_first")))
-    else:
-        prior = None
-    cand = banded.join(bfirst, ["band", "band_hash"])
-    if prior is not None:
-        cand = cand.join(prior, ["band", "band_hash"], "left")
-    else:
-        cand = cand.withColumn("prior_first", F.lit(None).cast("long"))
-    # least() skips nulls; each side is guarded to strict priors
-    prev = F.least(
-        F.when(F.col("first_doc") < F.col("doc_id"),
-               F.col("first_doc")),
-        F.when(F.col("prior_first") < F.col("doc_id"),
-               F.col("prior_first")))
-    marks = (cand.withColumn("prev", prev)
-             .groupBy("doc_id")
-             .agg(F.min("prev").alias("earliest_prior")))
-    out = (batch.select("doc_id")
-           .join(marks, "doc_id", "left")
-           .select("doc_id",
-                   F.col("earliest_prior").isNotNull().cast("long")
-                   .alias("is_dup"),
-                   "earliest_prior"))
-    new_b = bfirst
-    if prior is not None:
-        new_b = new_b.join(prior.select("band", "band_hash"),
-                           ["band", "band_hash"], "left_anti")
-    return out, new_b, banded
+    try:
+        bfirst = (banded.groupBy("band", "band_hash")
+                  .agg(F.min("doc_id").alias("first_doc")))
+        if fs.exists(P(state_path)):
+            prior = (spark.read.parquet(state_path)
+                     .filter(F.col("batch_id") < bid)
+                     .select("band", "band_hash",
+                             F.col("first_doc").alias("prior_first")))
+        else:
+            prior = None
+        cand = banded.join(bfirst, ["band", "band_hash"])
+        if prior is not None:
+            cand = cand.join(prior, ["band", "band_hash"], "left")
+        else:
+            cand = cand.withColumn("prior_first",
+                                   F.lit(None).cast("long"))
+        # least() skips nulls; each side is guarded to strict priors
+        prev = F.least(
+            F.when(F.col("first_doc") < F.col("doc_id"),
+                   F.col("first_doc")),
+            F.when(F.col("prior_first") < F.col("doc_id"),
+                   F.col("prior_first")))
+        marks = (cand.withColumn("prev", prev)
+                 .groupBy("doc_id")
+                 .agg(F.min("prev").alias("earliest_prior")))
+        out = (batch.select("doc_id")
+               .join(marks, "doc_id", "left")
+               .select("doc_id",
+                       F.col("earliest_prior").isNotNull().cast("long")
+                       .alias("is_dup"),
+                       "earliest_prior"))
+        new_b = bfirst
+        if prior is not None:
+            new_b = new_b.join(prior.select("band", "band_hash"),
+                               ["band", "band_hash"], "left_anti")
+        yield out, new_b
+    finally:
+        banded.unpersist()
 
 
 def corpus_funnel_stream(doc_stream: DataFrame, out_path: str,
@@ -534,13 +551,11 @@ def corpus_funnel_stream(doc_stream: DataFrame, out_path: str,
     from ..operators.textstats import funnel_counts, funnel_gates
 
     def sink(batch: DataFrame, bid: int) -> None:
-        marks, new_b, banded = _batch_dedup_marks(batch, bid, state_path)
-        j = funnel_gates(batch).join(
-            marks.select("doc_id", "is_dup"), "doc_id", "left")
-        partial = funnel_counts(j)
-        sinks.write_idempotent(partial, bid, out_path)
-        sinks.write_idempotent(new_b, bid, state_path)
-        banded.unpersist()
+        with _batch_dedup_marks(batch, bid, state_path) as (marks, new_b):
+            j = funnel_gates(batch).join(
+                marks.select("doc_id", "is_dup"), "doc_id", "left")
+            sinks.write_idempotent(funnel_counts(j), bid, out_path)
+            sinks.write_idempotent(new_b, bid, state_path)
 
     sinks.drain(doc_stream, sink, checkpoint)
 
@@ -589,12 +604,10 @@ def near_dup_rate_stream(doc_stream: DataFrame, out_path: str,
     from ..operators.dedup import near_dup_rate_partials
 
     def sink(batch: DataFrame, bid: int) -> None:
-        marks, new_b, banded = _batch_dedup_marks(batch, bid,
-                                                  state_path)
-        partial = near_dup_rate_partials(marks, batch)
-        sinks.write_idempotent(partial, bid, out_path)
-        sinks.write_idempotent(new_b, bid, state_path)
-        banded.unpersist()
+        with _batch_dedup_marks(batch, bid, state_path) as (marks, new_b):
+            sinks.write_idempotent(near_dup_rate_partials(marks, batch),
+                                   bid, out_path)
+            sinks.write_idempotent(new_b, bid, state_path)
 
     sinks.drain(doc_stream, sink, checkpoint)
 
@@ -891,35 +904,13 @@ def profile_sketch_stream(doc_stream: DataFrame, cols: list[str],
     are no-ops."""
     from ..operators.expectations import profile_sketches
 
-    spark = doc_stream.sparkSession
-
     def sink(batch: DataFrame, bid: int) -> None:
-        sinks.recover_store(store_path)
-        try:
-            existing = spark.read.parquet(store_path)
-        except Exception:
-            existing = None
-        if existing is not None:
-            prior_bid = existing.agg(F.max("merged_bid")).first()[0]
-            if prior_bid is None:
-                raise RuntimeError(
-                    f"profile store {store_path} is corrupt (no "
-                    "merged_bid); restore or delete the store to "
-                    "re-seed")
-            if bid <= prior_bid:
-                return  # replayed batch: already merged, atomically
-        prof = profile_sketches(batch, cols)
-        if existing is not None:
-            merged = (existing.drop("merged_bid").unionByName(prof)
-                      .groupBy("col_name")
-                      .agg(F.sum("ct").alias("ct"),
-                           F.sum("null_ct").alias("null_ct"),
-                           F.hll_union_agg("sk").alias("sk")))
-        else:
-            merged = prof
-        sinks.publish_store(
-            merged.withColumn("merged_bid", F.lit(bid).cast("long")),
-            store_path)
+        _merge_into_store(
+            profile_sketches(batch, cols), store_path, bid, "profile",
+            lambda rows: rows.groupBy("col_name").agg(
+                F.sum("ct").alias("ct"),
+                F.sum("null_ct").alias("null_ct"),
+                F.hll_union_agg("sk").alias("sk")))
 
     sinks.drain(doc_stream, sink, checkpoint)
 

@@ -10,9 +10,14 @@ writers with Spark-managed parquet tables.
    record's sinkTable field; here one partitioned write sends each
    sink_table group to its own directory in a single pass.
  - K4: dim upsert — Phoenix `upsert into` becomes a merge-by-pk
-   (last-write-wins on the pk) into a parquet dim table.
+   (last-write-wins on the pk) into a pk-bucketed parquet dim table:
+   one partitioned write stages the touched buckets, each is
+   published by directory rename.
 
-Every streaming job runs through :func:`drain`.
+Every streaming job runs through :func:`drain`. Both publishers —
+:func:`publish_store` (a whole store) and :func:`upsert_dim` (each
+touched dim bucket) — use one crash-safe rename protocol
+(:func:`_write_stage`, :func:`_swap_in`, :func:`_recover_swap`).
 """
 
 from __future__ import annotations
@@ -67,11 +72,11 @@ N_DIM_BUCKETS = 16
 DIM_BUCKET_COL = "pkbucket"
 
 
-def dim_bucket(pk_col, n_buckets: int = N_DIM_BUCKETS):
+def dim_bucket(pk_col):
     """Deterministic pk → bucket assignment (hash of the stringified
     pk, stable across batches and sessions)."""
     return F.pmod(F.xxhash64(pk_col.cast("string")),
-                  F.lit(n_buckets)).cast("int")
+                  F.lit(N_DIM_BUCKETS)).cast("int")
 
 
 def read_dim(spark, dim_path: str) -> DataFrame:
@@ -85,87 +90,107 @@ def read_dim(spark, dim_path: str) -> DataFrame:
 
 def upsert_dim(batch: DataFrame, dim_path: str, pk: str = "id",
                order_col: str | None = None,
-               n_buckets: int = N_DIM_BUCKETS,
-               op_col: str | None = None,
-               delete_op: str = "delete",
-               transient_cols: tuple[str, ...] = ()) -> None:
+               op_col: str | None = None) -> None:
     """K4 analog: merge a micro-batch into the dim table keyed on the
     sink_pk (default 'id', TableProcessFunction.java:71-73). Within a
     batch the row with the highest ``order_col`` per key wins (falls
-    back to dropDuplicates when no ordering column exists); against
-    the existing table new rows replace old rows with the same pk
-    (DimSinkFunction.java:56-69 upsert semantics).
+    back to dropDuplicates when no ordering column exists); the
+    ordering column is changelog plumbing and does not land in the
+    table. Against the existing table new rows replace old rows with
+    the same pk (DimSinkFunction.java:56-69 upsert semantics).
 
     Incremental copy-on-write: the table is laid out as
     ``pkbucket=N`` hash-bucket partitions and a batch rewrites ONLY
-    the buckets containing its keys — untouched buckets' files are
-    left byte-identical. A full-table rewrite per micro-batch (the
-    previous form, SCALE.md's top known limit) is O(table) per batch;
-    this is O(table · touched/n_buckets), which at 100 TB with
-    thousands of buckets approaches O(batch).
+    the buckets containing its keys — untouched buckets' files stay
+    byte-identical, so a batch costs O(table · touched /
+    N_DIM_BUCKETS), not O(table). The touched buckets are read once
+    and their merged rows written in ONE partitioned write to
+    ``<table>/_stage``, which readers never see (Spark's file listing
+    skips ``_``-prefixed dirs). Each touched bucket is then published
+    by :func:`_swap_in`, set aside under ``<table>/_prev`` while its
+    staged successor is renamed in; one with no surviving rows is
+    removed. Every merge first completes or undoes a crashed one
+    (:func:`_recover_buckets`).
 
     With ``op_col`` set, the batch is a CDC changelog slice: the
-    latest row per pk decides — a ``delete_op`` row removes the pk
-    from its bucket (the Maxwell/Debezium 'delete' the reference's
-    DWD layer filters OUT, BaseDBApp.java:42-56, here applied so a
+    latest row per pk decides — a 'delete' row removes the pk from
+    its bucket (the Maxwell/Debezium 'delete' the reference's DWD
+    layer filters OUT, BaseDBApp.java:42-56, here applied so a
     replayed changelog CONVERGES to the source table — proven by the
     snapshot_diff reconciliation test); anything else upserts. Apply
-    is idempotent per pk, so batch replay after failure converges
-    without markers."""
-    import shutil
-
+    is idempotent per pk, so replaying a batch after a crash at any
+    point converges without markers: the buckets the crashed merge
+    already published lose and regain exactly the batch's keys."""
     spark = batch.sparkSession
+    fs, P = store_fs(spark, dim_path)
+    stage = os.path.join(dim_path, "_stage")
+    prev = os.path.join(dim_path, "_prev")
+    _recover_buckets(fs, P, dim_path)
     if order_col is not None:
         w = Window.partitionBy(pk).orderBy(F.desc(order_col))
         latest = (batch.withColumn("_rn", F.row_number().over(w))
-                  .filter(F.col("_rn") == 1).drop("_rn"))
+                  .filter(F.col("_rn") == 1).drop("_rn", order_col))
     else:
         latest = batch.dropDuplicates([pk])
-    # transient_cols: changelog plumbing (sequence numbers etc.) that
-    # ordered/filtered the batch but must NOT land in the dim table —
-    # the @TransientSink analog for the CDC apply path
-    latest = latest.drop(*transient_cols)
     latest = latest.withColumn(DIM_BUCKET_COL,
-                               dim_bucket(F.col(pk), n_buckets)).persist()
-    if op_col is not None:
-        # null-safe: a dirty row with op=NULL must UPSERT (it carries a
-        # payload), not silently vanish — NULL != 'delete' is NULL,
-        # which a plain filter would drop, deleting the key
-        upserts = latest.filter(
-            ~F.col(op_col).eqNullSafe(delete_op)).drop(op_col)
-    else:
-        upserts = latest
-    # bounded collect: at most n_buckets rows
-    touched = sorted(
-        r[0] for r in latest.select(DIM_BUCKET_COL).distinct().collect())
-    for b in touched:
-        bpath = os.path.join(dim_path, f"{DIM_BUCKET_COL}={b}")
-        try:
-            existing = spark.read.parquet(bpath)
-        except Exception:
-            existing = None
-        bkeys = latest.filter(F.col(DIM_BUCKET_COL) == b).select(pk)
-        brows = upserts.filter(F.col(DIM_BUCKET_COL) == b) \
-                       .drop(DIM_BUCKET_COL)
-        if existing is not None:
+                               dim_bucket(F.col(pk))).persist()
+    try:
+        # bounded collect: at most N_DIM_BUCKETS rows
+        touched = [f"{DIM_BUCKET_COL}={b}" for b in sorted(
+            r[0] for r in latest.select(DIM_BUCKET_COL).distinct()
+            .collect())]
+        merged = latest
+        if op_col is not None:
+            # null-safe: a dirty row with op=NULL must UPSERT (it
+            # carries a payload), not silently vanish — NULL !=
+            # 'delete' is NULL, which a plain filter would drop,
+            # deleting the key
+            merged = latest.filter(
+                ~F.col(op_col).eqNullSafe("delete")).drop(op_col)
+        live = [os.path.join(dim_path, b) for b in touched
+                if fs.exists(P(os.path.join(dim_path, b)))]
+        if live:
             # allowMissingColumns: a mid-stream config change can
             # evolve the dim's column set (the runtime-DDL path) —
             # new columns arrive as nulls on old rows, removed ones
             # stay null on new rows, mirroring Phoenix's additive
-            # ALTER behavior. The anti-join removes EVERY touched pk
-            # (deletes stay removed; upserts come back from brows).
-            merged = existing.join(bkeys, pk, "left_anti") \
-                             .unionByName(brows, allowMissingColumns=True)
-        else:
-            merged = brows
-        # two-phase swap per bucket: materialize to a staging dir,
-        # then republish — we cannot overwrite bpath while lazily
-        # reading from it
-        tmp = bpath + "._staging"
-        merged.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(bpath)
-        shutil.rmtree(tmp, ignore_errors=True)
-    latest.unpersist()
+            # ALTER behavior. The anti-join removes EVERY batch pk
+            # (deletes stay removed; upserts come back from merged).
+            existing = (spark.read.option("mergeSchema", "true")
+                        .option("basePath", dim_path).parquet(*live))
+            merged = (existing.join(latest.select(pk), pk, "left_anti")
+                      .unionByName(merged, allowMissingColumns=True))
+        _write_stage(merged.repartition(DIM_BUCKET_COL).write
+                     .partitionBy(DIM_BUCKET_COL), fs, P, stage)
+        fs.mkdirs(P(prev))
+        for b in touched:
+            staged = P(os.path.join(stage, b))
+            _swap_in(fs, staged if fs.exists(staged) else None,
+                     P(os.path.join(dim_path, b)),
+                     P(os.path.join(prev, b)))
+        fs.delete(P(stage), True)
+        fs.delete(P(prev), True)
+    finally:
+        latest.unpersist()
+
+
+def _recover_buckets(fs, P, dim_path: str) -> None:
+    """Crash recovery for :func:`upsert_dim`: every bucket a crashed
+    merge left set aside under ``_prev`` gets its staged successor if
+    the stage committed, else its old files back; then ``_stage`` and
+    ``_prev`` are deleted. Buckets the crashed merge had not reached
+    keep their old rows until the replayed batch merges them."""
+    stage = os.path.join(dim_path, "_stage")
+    prev = P(os.path.join(dim_path, "_prev"))
+    if fs.exists(prev):
+        complete = fs.exists(P(os.path.join(stage, "_SUCCESS")))
+        for st in fs.listStatus(prev):
+            b = st.getPath().getName()
+            _recover_swap(fs, P(os.path.join(stage, b)),
+                          P(os.path.join(dim_path, b)), st.getPath(),
+                          complete)
+    fs.delete(P(stage), True)
+    fs.delete(prev, True)
 
 
 def publish_store(staged_df: DataFrame, store_path: str) -> None:
@@ -197,21 +222,9 @@ def publish_store(staged_df: DataFrame, store_path: str) -> None:
     stage → finish the rename; store missing + ._prev only → roll
     back. No state leaves a partial store readable."""
     fs, P = store_fs(staged_df.sparkSession, store_path)
-    stage, prev, store = (P(store_path + "._stage"),
-                          P(store_path + "._prev"), P(store_path))
-    fs.delete(stage, True)
-    staged_df.write.mode("overwrite").parquet(store_path + "._stage")
-    if not fs.exists(P(store_path + "._stage/_SUCCESS")):
-        raise RuntimeError(
-            f"staging write for {store_path} committed without "
-            "_SUCCESS; refusing to publish")
-    # FileSystem.rename reports failure by RETURNING false, not by
-    # raising — an unchecked call would silently skip the publish
-    if fs.exists(store) and not fs.rename(store, prev):
-        raise RuntimeError(f"could not set aside {store_path}")
-    if not fs.rename(stage, store):
-        raise RuntimeError(f"could not publish staging into {store_path}")
-    fs.delete(prev, True)
+    _write_stage(staged_df.write, fs, P, store_path + "._stage")
+    _swap_in(fs, P(store_path + "._stage"), P(store_path),
+             P(store_path + "._prev"))
 
 
 def store_fs(spark, path: str):
@@ -235,33 +248,61 @@ def recover_store(store_path: str) -> None:
     if spark is None:
         raise RuntimeError("recover_store needs an active SparkSession")
     fs, P = store_fs(spark, store_path)
-    stage, prev, store = (P(store_path + "._stage"),
-                          P(store_path + "._prev"), P(store_path))
-    if not fs.exists(store):
-        # FileSystem.rename reports failure by RETURNING false (same
-        # contract publish_store checks) — if the recovery rename
-        # fails while no live store exists, falling through to the
-        # cleanup deletes would destroy the only surviving copies
-        if fs.exists(P(store_path + "._stage/_SUCCESS")):
-            # crash between rename-aside and rename-in (or mid-
-            # cleanup): the stage is complete — finish the publish
-            if not fs.rename(stage, store):
-                raise RuntimeError(
-                    f"recover_store: could not publish surviving "
-                    f"stage into {store_path}; leaving stage/prev "
-                    "intact")
-        elif fs.exists(prev):
-            # defensive: stage gone but the old store was set aside —
-            # roll back rather than re-seed from nothing
-            if not fs.rename(prev, store):
-                raise RuntimeError(
-                    f"recover_store: could not roll back set-aside "
-                    f"store into {store_path}; leaving prev intact")
+    stage, prev = P(store_path + "._stage"), P(store_path + "._prev")
+    _recover_swap(fs, stage, P(store_path), prev,
+                  fs.exists(P(store_path + "._stage/_SUCCESS")))
     # a leftover stage next to a live store means the crash was
     # before rename-aside: the store is intact, the replayed batch
     # recomputes — discard the stage either way
     fs.delete(stage, True)
     fs.delete(prev, True)
+
+
+# The one rename protocol behind publish_store (a whole store) and
+# upsert_dim (each touched bucket): stage, swap in, recover.
+
+def _write_stage(writer, fs, P, stage: str) -> None:
+    """Write ``writer``'s frame to ``stage`` and insist on the
+    _SUCCESS marker Spark stamps on job commit — the completeness
+    witness recovery trusts."""
+    writer.mode("overwrite").parquet(stage)
+    if not fs.exists(P(os.path.join(stage, "_SUCCESS"))):
+        raise RuntimeError(
+            f"staging write {stage} committed without _SUCCESS; "
+            "refusing to publish")
+
+
+def _swap_in(fs, stage, live, prev) -> None:
+    """Publish the directory ``stage`` at ``live`` (remove ``live``
+    when ``stage`` is None): rename the live dir aside to ``prev``,
+    rename the stage in, delete ``prev``. A crash between any two
+    steps leaves a state :func:`_recover_swap` completes or undoes."""
+    # FileSystem.rename reports failure by RETURNING false, not by
+    # raising — an unchecked call would silently skip the publish
+    if fs.exists(live) and not fs.rename(live, prev):
+        raise RuntimeError(f"could not set aside {live}")
+    if stage is not None and not fs.rename(stage, live):
+        raise RuntimeError(f"could not publish {stage} into {live}")
+    fs.delete(prev, True)
+
+
+def _recover_swap(fs, stage, live, prev, complete: bool) -> None:
+    """Finish or undo a :func:`_swap_in` that died with ``live``
+    missing: a ``complete`` stage is renamed in, else the set-aside
+    ``prev`` is renamed back. The caller deletes what is left."""
+    if fs.exists(live):
+        return
+    # a failed recovery rename must raise: falling through to the
+    # caller's cleanup deletes would destroy the only surviving copies
+    if complete and fs.exists(stage):
+        if not fs.rename(stage, live):
+            raise RuntimeError(
+                f"could not publish surviving stage {stage} into "
+                f"{live}; leaving stage/prev intact")
+    elif fs.exists(prev) and not fs.rename(prev, live):
+        raise RuntimeError(
+            f"could not roll back {prev} into {live}; leaving prev "
+            "intact")
 
 
 def compact_table(spark, path: str,
@@ -275,10 +316,10 @@ def compact_table(spark, path: str,
 
     Compaction happens PER PARTITION DIRECTORY (batch_id=N,
     pkbucket=N, day=...): each leaf directory's files are rewritten
-    to ``target_files_per_partition`` via the same stage-then-
-    republish swap as upsert_dim's bucket rewrite — the hive layout,
-    the batch_id column, downstream `batch_id < bid` state filters,
-    and replay-overwrite semantics all survive, and no moment exists
+    to ``target_files_per_partition`` via a stage-then-republish
+    copy — the hive layout, the batch_id column, downstream
+    `batch_id < bid` state filters, and replay-overwrite semantics
+    all survive, and no moment exists
     where the table as a whole is missing — with one caveat: the
     final republish into a LEAF directory is itself non-atomic, so a
     crash mid-republish can leave that one partition partial while
@@ -360,31 +401,11 @@ def optimize_layout(df: DataFrame, path: str, range_cols: list[str],
     the files it must; the number is also the test's assertion
     surface. Metadata is read back footer-side (pyarrow), no data
     scan."""
-    import os
-
-    import pyarrow.parquet as pq
-
     (df.repartitionByRange(n_partitions, *range_cols)
        .sortWithinPartitions(*range_cols)
        .write.mode("overwrite").parquet(path))
 
-    key = range_cols[0]
-    spans = []
-    for fn in os.listdir(path):
-        if not fn.endswith(".parquet") or fn.startswith("."):
-            continue
-        md = pq.read_metadata(os.path.join(path, fn))
-        lo = hi = None
-        for rg in range(md.num_row_groups):
-            for ci in range(md.row_group(rg).num_columns):
-                col = md.row_group(rg).column(ci)
-                if col.path_in_schema == key and col.statistics:
-                    s = col.statistics
-                    lo = s.min if lo is None else min(lo, s.min)
-                    hi = s.max if hi is None else max(hi, s.max)
-        if lo is not None:
-            spans.append((lo, hi))
-    spans.sort()
+    spans = _file_spans(path, range_cols[0])
     disjoint = sum(1 for i in range(1, len(spans))
                    if spans[i][0] >= spans[i - 1][1])
     pct = 100 * disjoint // max(len(spans) - 1, 1)
@@ -393,8 +414,6 @@ def optimize_layout(df: DataFrame, path: str, range_cols: list[str],
 
 def _file_spans(path: str, key: str) -> list[tuple]:
     """Footer-side per-file (min, max) spans for one column."""
-    import os
-
     import pyarrow.parquet as pq
 
     spans = []

@@ -7,7 +7,7 @@ Topology (mirrors SURVEY.md §0's layer diagram):
 
   ods_log/   ──text──► parse → dirty/│start│page│display   (BaseLogApp)
   ods_db/    ──jsonl──► normalize → route via table_process (BaseDBApp)
-      ├─ dims → merge-by-pk parquet tables                  (DimSink)
+      ├─ dims → P3 per spec → bucket merge-by-pk, rename    (DimSink)
       └─ facts → typed streams
   page ──► UV dedup / bounce detect (stateful)              (UniqueVisit/UserJump)
   order⋈detail ──► order_wide  ──⋈payment──► payment_wide   (OrderWide/PaymentWide)
@@ -26,7 +26,6 @@ operators/gmall_dws are the check the tests compare it against.
 from __future__ import annotations
 
 import os
-import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -100,89 +99,37 @@ class Warehouse:
 
         def sink(cdc_batch: DataFrame, bid: int) -> None:
             batch = dwd.route_cdc(cdc_batch, self.config).persist()
-            facts = batch.filter(F.col("sink_type") == "kafka")
-            sinks.write_routed(facts, bid, self._p("dwd_facts"))
-            # K4, config-driven end-to-end: ONE partitioned write stages
-            # every dim row (a single Spark job per micro-batch), then
-            # each staged table merges under its configured pk. Table
-            # set, column list and pk all travel on the routed rows —
-            # i.e. straight from the table_process config — so a config
-            # row arriving mid-stream materializes a brand-new dim table
-            # on its first batch, mirroring the reference's runtime DDL
-            # (TableProcessFunction.java:62-121).
-            sinks.write_routed(batch.filter(F.col("sink_type") == "hbase"),
-                               bid, self._p("dim_staging"))
-            stage = self._p("dim_staging", f"batch_id={bid}")
-            parts = (sorted(os.listdir(stage))
-                     if os.path.isdir(stage) else [])
-            for entry in parts:
-                if not entry.startswith("sink_table="):
-                    continue
-                table = entry.split("=", 1)[1]
-                rows = self.spark.read.parquet(os.path.join(stage, entry))
-                # one table can carry several specs (e.g. different
-                # sink_columns per operate_type): project each spec's
-                # rows with ITS column list, as the reference does per
-                # record (TableProcessFunction.java:155-172). A null/
-                # empty sink_columns keeps the record unfiltered
-                # (ibid:62-68): columns come from the JSON payload.
-                specs = rows.select("sink_columns", "sink_pk") \
-                            .distinct().collect()
-                for spec in specs:
-                    srows = rows.filter(
-                        F.col("sink_columns").eqNullSafe(
-                            spec["sink_columns"])
-                        & F.col("sink_pk").eqNullSafe(spec["sink_pk"]))
-                    pk = spec["sink_pk"] or "id"
-                    if spec["sink_columns"]:
-                        cols = [c.strip()
-                                for c in spec["sink_columns"].split(",")]
-                        # defensive (the reference tolerates malformed
-                        # table_process rows): a config whose column
-                        # list omits its own pk must not fail the whole
-                        # micro-batch with an AnalysisException — the
-                        # merge needs the pk projected, so append it
-                        if pk not in cols:
-                            warnings.warn(
-                                f"dim spec for {table}: sink_pk '{pk}' "
-                                f"missing from sink_columns; appending it",
-                                RuntimeWarning, stacklevel=2)
-                            cols.append(pk)
-                    else:
-                        # cold fallback for a spec with NO column
-                        # list: derive column NAMES from the JSON
-                        # payloads with a DataFrame-only key scan
-                        # (json_object_keys + explode + distinct) —
-                        # no .rdd hop, no driver-side schema
-                        # inference; types are irrelevant here since
-                        # the projection below extracts strings via
-                        # get_json_object either way
-                        cols = sorted(
-                            r.k for r in srows.select(
-                                F.explode(F.json_object_keys("data"))
-                                .alias("k")).distinct().collect())
-                        if pk not in cols:
-                            # payload genuinely lacks the pk: skip this
-                            # spec (merging on an all-null key would
-                            # collapse the table) and keep the batch
-                            warnings.warn(
-                                f"skipping dim spec for {table}: sink_pk "
-                                f"'{pk}' absent from the JSON payload",
-                                RuntimeWarning, stacklevel=2)
-                            continue
-                    projected = srows.select(*[
-                        F.get_json_object(F.col("data"), f"$.{c}").alias(c)
-                        for c in cols])
+            try:
+                facts = batch.filter(F.col("sink_type") == "kafka")
+                sinks.write_routed(facts, bid, self._p("dwd_facts"))
+                # K4, config-driven end-to-end: table, column list and
+                # pk travel on the routed rows — straight from the
+                # table_process config — so a config row arriving
+                # mid-stream materializes a brand-new dim table on its
+                # first batch (TableProcessFunction.java:62-121). One
+                # table can carry several specs (e.g. different
+                # sink_columns per operate_type): each spec's rows are
+                # projected with ITS column list, as the reference does
+                # per record (ibid:155-172).
+                dims = batch.filter(F.col("sink_type") == "hbase")
+                for spec in dims.select("sink_table", "sink_columns",
+                                        "sink_pk").distinct().collect():
+                    rows = dims.filter(
+                        (F.col("sink_table") == spec.sink_table)
+                        & F.col("sink_columns").eqNullSafe(spec.sink_columns)
+                        & F.col("sink_pk").eqNullSafe(spec.sink_pk))
+                    pk = spec.sink_pk or "id"
+                    cols = dwd.sink_column_list(
+                        rows, spec.sink_table, spec.sink_columns, pk)
+                    if cols is None:
+                        continue
+                    projected = dwd.project_sink_columns(
+                        rows, spec.sink_table, cols)
                     sinks.upsert_dim(
                         projected.withColumn(pk, F.col(pk).cast("long")),
-                        self._p("dim", table), pk=pk)
-            # staging is transient: replay rebuilds it from the
-            # checkpointed source batch, so drop it once merged
-            if os.path.isdir(stage):
-                import shutil
-
-                shutil.rmtree(stage, ignore_errors=True)
-            batch.unpersist()
+                        self._p("dim", spec.sink_table), pk=pk)
+            finally:
+                batch.unpersist()
 
         sinks.drain(stream, sink, self._p("ck", "base_db"))
 
@@ -224,8 +171,7 @@ class Warehouse:
         store itself (the table set is config-driven, not a constant)."""
         base = self._p("dim")
         names = sorted(d for d in os.listdir(base)
-                       if d.startswith("dim_")
-                       and not d.endswith("._staging"))
+                       if d.startswith("dim_"))
         return {n.removeprefix("dim_"): self.dim(n) for n in names}
 
     def fact(self, sink_table: str):

@@ -128,6 +128,126 @@ def test_upsert_dim_rewrites_only_touched_buckets(spark, tmp_path):
     assert got == set(range(40)) | {new_key}
 
 
+def _dim_crash_case(spark, tmp_path, name):
+    """A 40-row bucketed dim at ``name``, a batch that updates every
+    third key and adds one, and what the uncrashed merge reads back.
+    Returns (table, batch, rows_before, rows_after, bucket_of, read)."""
+    from gmall_flink_2021_spark.streaming import sinks
+
+    schema = "id long, name string"
+    base = spark.createDataFrame([(i, f"v{i}") for i in range(40)], schema)
+    batch = spark.createDataFrame(
+        [(i, f"w{i}") for i in range(0, 40, 3)] + [(100, "new")], schema)
+    bucket_of = dict(spark.range(101).select(
+        "id", sinks.dim_bucket(F.col("id"))).collect())
+
+    def read(path):
+        return sorted(tuple(r) for r in sinks.read_dim(spark, path).collect())
+
+    clean = str(tmp_path / f"{name}_uncrashed")
+    sinks.upsert_dim(base, clean)
+    sinks.upsert_dim(batch, clean)
+    table = str(tmp_path / name)
+    sinks.upsert_dim(base, table)
+    return table, batch, read(table), read(clean), bucket_of, read
+
+
+def _no_merge_debris(table):
+    import os
+
+    return not any(os.path.exists(os.path.join(table, d))
+                   for d in ("_stage", "_prev"))
+
+
+def test_upsert_dim_discards_a_stage_without_success(spark, tmp_path):
+    """Crash mid-stage: a partial ``_stage`` (no _SUCCESS) inside the
+    table dir is never read, and re-running the merge discards it and
+    writes exactly the uncrashed result."""
+    import os
+
+    from gmall_flink_2021_spark.streaming import sinks
+
+    table, batch, before, want, _, read = _dim_crash_case(
+        spark, tmp_path, "dim_stage_crash")
+    stage = os.path.join(table, "_stage")
+    (spark.createDataFrame([(7, "STAGED", 3)],
+                           "id long, name string, pkbucket int")
+     .write.partitionBy("pkbucket").parquet(stage))
+    os.remove(os.path.join(stage, "_SUCCESS"))
+    assert read(table) == before
+    sinks.upsert_dim(batch, table)
+    assert read(table) == want
+    assert _no_merge_debris(table)
+
+
+def test_upsert_dim_recovers_a_bucket_set_aside(spark, tmp_path):
+    """Crash between a bucket's rename-aside and its rename-in: while
+    the bucket sits in ``_prev`` it is missing from the read (no
+    staged or set-aside row shows), and the next merge — whether the
+    stage committed (roll forward) or not (roll back) — converges to
+    the uncrashed result."""
+    import os
+    import shutil
+
+    from gmall_flink_2021_spark.streaming import sinks
+
+    for committed in (True, False):
+        table, batch, before, want, bucket_of, read = _dim_crash_case(
+            spark, tmp_path, f"dim_aside_{committed}")
+        b = bucket_of[0]
+        clean = table + "_uncrashed"
+        stage = os.path.join(table, "_stage")
+        for d in sorted(os.listdir(clean)):
+            if d.startswith(f"{sinks.DIM_BUCKET_COL}="):
+                shutil.copytree(os.path.join(clean, d),
+                                os.path.join(stage, d))
+        if committed:
+            open(os.path.join(stage, "_SUCCESS"), "w").close()
+        os.makedirs(os.path.join(table, "_prev"))
+        os.rename(os.path.join(table, f"pkbucket={b}"),
+                  os.path.join(table, "_prev", f"pkbucket={b}"))
+        assert read(table) == [r for r in before if bucket_of[r[0]] != b]
+        sinks.upsert_dim(batch, table)
+        assert read(table) == want, committed
+        assert _no_merge_debris(table)
+
+
+def test_upsert_dim_crash_between_bucket_renames(spark, tmp_path,
+                                                monkeypatch):
+    """A merge that dies after publishing one bucket and setting the
+    next aside leaves a table whose read has no staged or set-aside
+    row: published buckets read new, the set-aside one is missing,
+    the rest read old. Re-running the same merge gives exactly the
+    uncrashed rows."""
+    from gmall_flink_2021_spark.streaming import sinks
+
+    table, batch, before, want, bucket_of, read = _dim_crash_case(
+        spark, tmp_path, "dim_multi_crash")
+    touched = sorted({bucket_of[r.id] for r in batch.collect()})
+    assert len(touched) > 2
+    real = sinks._swap_in
+    calls = []
+
+    def crash_on_second_bucket(fs, stage, live, prev):
+        calls.append(live)
+        if len(calls) == 2:
+            fs.rename(live, prev)
+            raise RuntimeError("injected crash")
+        real(fs, stage, live, prev)
+
+    monkeypatch.setattr(sinks, "_swap_in", crash_on_second_bucket)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        sinks.upsert_dim(batch, table)
+    monkeypatch.undo()
+    first, second = touched[:2]
+    assert read(table) == sorted(
+        [r for r in want if bucket_of[r[0]] == first]
+        + [r for r in before if bucket_of[r[0]] not in (first, second)])
+    sinks.upsert_dim(batch, table)
+    assert read(table) == want
+    assert _no_merge_debris(table)
+
+
 def test_uv_sketch_rollup_streaming_matches_batch(spark, tmp_path):
     """Sketch-rollup ingest as a stream: per-micro-batch daily HLL
     sketches union-merged into the store must yield EXACTLY the batch
@@ -1173,12 +1293,16 @@ def test_dsir_streaming_matches_batch(spark, tmp_path):
 
 
 def test_failed_stream_releases_its_persisted_index(spark, tmp_path):
-    """A job that persists a static helper frame (dsir's llr table)
-    must release it when its query fails, not only on success: the
-    sink's write lands under a regular file, so the first micro-batch
-    raises, and the session's persisted-RDD count is back where it
-    was."""
-    from gmall_flink_2021_spark.streaming.jobs import dsir_score_stream
+    """A job that persists a frame — a static helper (dsir's llr
+    table) or a per-batch one (heavy_hitter's batch counts, which are
+    materialized before the store publish) — must release it when its
+    query fails, not only on success: each sink's write lands under a
+    regular file, so the first micro-batch raises, and the session's
+    persisted-RDD count is back where it was."""
+    from gmall_flink_2021_spark.streaming.jobs import (
+        dsir_score_stream,
+        heavy_hitter_stream,
+    )
 
     docs = load_table(spark, SF_SMOKE, "documents")
     src = str(tmp_path / "docs_dsir_fail")
@@ -1190,12 +1314,19 @@ def test_failed_stream_releases_its_persisted_index(spark, tmp_path):
     def persisted() -> int:
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
-    before = persisted()
-    with pytest.raises(Exception):
-        dsir_score_stream(stream, docs, str(blocker / "out"),
-                          str(tmp_path / "ck_dsir_fail"))
-    assert persisted() == before
-    assert not spark.streams.active
+    runs = {
+        "dsir": lambda: dsir_score_stream(
+            stream, docs, str(blocker / "out"),
+            str(tmp_path / "ck_dsir_fail")),
+        "heavy_hitter": lambda: heavy_hitter_stream(
+            stream, str(blocker / "store"), str(tmp_path / "ck_hh_fail")),
+    }
+    for name, run in runs.items():
+        before = persisted()
+        with pytest.raises(Exception):
+            run()
+        assert persisted() == before, name
+        assert not spark.streams.active, name
 
 
 def test_bpe_encode_streaming_matches_batch(spark, tmp_path):
