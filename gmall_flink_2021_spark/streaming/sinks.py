@@ -12,7 +12,10 @@ writers with Spark-managed parquet tables.
  - K4: dim upsert — Phoenix `upsert into` becomes a merge-by-pk
    (last-write-wins on the pk) into a pk-bucketed parquet dim table:
    one partitioned write stages the touched buckets, each is
-   published by directory rename.
+   published by directory rename. The table records its own schema
+   in ``<table>/_schema.json``, written before any bucket is
+   published, so a read is a file listing with no footer job; a
+   bucket older than a column reads it as null.
 
 Every streaming job runs through :func:`drain`. Both publishers —
 :func:`publish_store` (a whole store) and :func:`upsert_dim` (each
@@ -22,11 +25,13 @@ touched dim bucket) — use one crash-safe rename protocol
 
 from __future__ import annotations
 
+import json
 import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def drain(stream: DataFrame, sink: Callable[[DataFrame, int], None],
@@ -71,6 +76,10 @@ N_DIM_BUCKETS = 16
 # would be invisible to readers. `read_dim` strips it back off.
 DIM_BUCKET_COL = "pkbucket"
 
+# The recorded table schema, inside the table dir; the `_` prefix
+# keeps it out of Spark's file listing.
+DIM_SCHEMA_FILE = "_schema.json"
+
 
 def dim_bucket(pk_col):
     """Deterministic pk → bucket assignment (hash of the stringified
@@ -80,12 +89,16 @@ def dim_bucket(pk_col):
 
 
 def read_dim(spark, dim_path: str) -> DataFrame:
-    """Read a bucketed dim table: mergeSchema covers buckets whose
-    files predate a mid-stream column evolution (only touched buckets
-    are rewritten with the new columns), and the bucket partition
-    column is an implementation detail the consumer never sees."""
-    df = spark.read.option("mergeSchema", "true").parquet(dim_path)
-    return df.drop(DIM_BUCKET_COL)
+    """Read a bucketed dim table with the schema :func:`upsert_dim`
+    recorded in ``<table>/_schema.json``: a file listing and no Spark
+    job. A bucket whose files predate a mid-stream column evolution
+    (only touched buckets are rewritten with the new columns) reads
+    the newer columns as null. The bucket partition column is an
+    implementation detail the consumer never sees."""
+    schema = _recorded_schema(*store_fs(spark, dim_path), dim_path)
+    if schema is None:
+        raise FileNotFoundError(f"no dim table at {dim_path}")
+    return spark.read.schema(schema).parquet(dim_path).drop(DIM_BUCKET_COL)
 
 
 def upsert_dim(batch: DataFrame, dim_path: str, pk: str = "id",
@@ -112,6 +125,14 @@ def upsert_dim(batch: DataFrame, dim_path: str, pk: str = "id",
     removed. Every merge first completes or undoes a crashed one
     (:func:`_recover_buckets`).
 
+    The table's schema lives in ``<table>/_schema.json``: the recorded
+    columns in order, then any new column of the batch appended
+    (``pkbucket`` is never recorded). The merge reads the touched
+    buckets with it and rewrites it, by temp file and rename, only
+    when it grows and before any bucket is published, so it is always
+    a superset of every bucket's columns and :func:`read_dim` needs
+    no footer.
+
     With ``op_col`` set, the batch is a CDC changelog slice: the
     latest row per pk decides — a 'delete' row removes the pk from
     its bucket (the Maxwell/Debezium 'delete' the reference's DWD
@@ -126,6 +147,7 @@ def upsert_dim(batch: DataFrame, dim_path: str, pk: str = "id",
     stage = os.path.join(dim_path, "_stage")
     prev = os.path.join(dim_path, "_prev")
     _recover_buckets(fs, P, dim_path)
+    recorded = _recorded_schema(fs, P, dim_path)
     if order_col is not None:
         w = Window.partitionBy(pk).orderBy(F.desc(order_col))
         latest = (batch.withColumn("_rn", F.row_number().over(w))
@@ -156,10 +178,13 @@ def upsert_dim(batch: DataFrame, dim_path: str, pk: str = "id",
             # stay null on new rows, mirroring Phoenix's additive
             # ALTER behavior. The anti-join removes EVERY batch pk
             # (deletes stay removed; upserts come back from merged).
-            existing = (spark.read.option("mergeSchema", "true")
+            existing = (spark.read.schema(recorded)
                         .option("basePath", dim_path).parquet(*live))
             merged = (existing.join(latest.select(pk), pk, "left_anti")
                       .unionByName(merged, allowMissingColumns=True))
+        grown = _grow_schema(recorded, merged.schema)
+        if grown is not None:
+            _write_schema(fs, P, dim_path, grown)
         _write_stage(merged.repartition(DIM_BUCKET_COL).write
                      .partitionBy(DIM_BUCKET_COL), fs, P, stage)
         fs.mkdirs(P(prev))
@@ -174,14 +199,77 @@ def upsert_dim(batch: DataFrame, dim_path: str, pk: str = "id",
         latest.unpersist()
 
 
+def _recorded_schema(fs, P, dim_path: str) -> StructType | None:
+    """The schema :func:`upsert_dim` recorded for ``dim_path``, or
+    None before its first merge. A merge that died inside
+    :func:`_write_schema` after deleting the old file left the new
+    one, whole, at the temp name; a temp file cut short earlier (no
+    strict prefix of a JSON object parses) does not count."""
+    final = os.path.join(dim_path, DIM_SCHEMA_FILE)
+    for path in (final, final + ".tmp"):
+        if not fs.exists(P(path)):
+            continue
+        stream = fs.open(P(path))
+        try:
+            text = bytes(stream.readAllBytes())
+        finally:
+            stream.close()
+        try:
+            return StructType.fromJson(json.loads(text))
+        except ValueError:
+            pass
+    return None
+
+
+def _grow_schema(recorded: StructType | None,
+                 merged: StructType) -> StructType | None:
+    """``recorded`` with every column of ``merged`` it lacks appended
+    (nullable, ``pkbucket`` left out), or None when nothing is new."""
+    have = set() if recorded is None else set(recorded.fieldNames())
+    new = [StructField(f.name, f.dataType, True) for f in merged.fields
+           if f.name not in have and f.name != DIM_BUCKET_COL]
+    if not new:
+        return None
+    return StructType((recorded.fields if recorded else []) + new)
+
+
+def _write_schema(fs, P, dim_path: str, schema: StructType) -> None:
+    """Replace ``<table>/_schema.json``: write the temp file whole,
+    delete the old file, rename the temp in (FileSystem.rename
+    refuses an existing target). Every crash state reads back as the
+    old or the new schema (:func:`_recorded_schema`), and the next
+    merge finishes the rename (:func:`_recover_buckets`)."""
+    final = P(os.path.join(dim_path, DIM_SCHEMA_FILE))
+    tmp = P(os.path.join(dim_path, DIM_SCHEMA_FILE + ".tmp"))
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(schema.json().encode()))
+    finally:
+        out.close()
+    fs.delete(final, False)
+    if not fs.rename(tmp, final):
+        raise RuntimeError(f"could not publish the schema of {dim_path}")
+
+
 def _recover_buckets(fs, P, dim_path: str) -> None:
     """Crash recovery for :func:`upsert_dim`: every bucket a crashed
     merge left set aside under ``_prev`` gets its staged successor if
     the stage committed, else its old files back; then ``_stage`` and
     ``_prev`` are deleted. Buckets the crashed merge had not reached
-    keep their old rows until the replayed batch merges them."""
+    keep their old rows until the replayed batch merges them. A
+    schema left whole at its temp name is renamed in; one cut short
+    (only a first merge can leave that, before any bucket) is
+    dropped."""
     stage = os.path.join(dim_path, "_stage")
     prev = P(os.path.join(dim_path, "_prev"))
+    final = P(os.path.join(dim_path, DIM_SCHEMA_FILE))
+    tmp = P(os.path.join(dim_path, DIM_SCHEMA_FILE + ".tmp"))
+    if not fs.exists(final) and fs.exists(tmp):
+        if _recorded_schema(fs, P, dim_path) is None:
+            fs.delete(tmp, False)
+        elif not fs.rename(tmp, final):
+            raise RuntimeError(
+                f"could not publish the schema of {dim_path}")
     if fs.exists(prev):
         complete = fs.exists(P(os.path.join(stage, "_SUCCESS")))
         for st in fs.listStatus(prev):

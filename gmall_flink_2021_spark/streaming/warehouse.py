@@ -29,6 +29,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators import dwd, gmall_dwm, gmall_dws
 from ..schemas import TABLE_PROCESS_SCHEMA
@@ -42,6 +43,7 @@ class Warehouse:
                  config_rows: list[dict]):
         self.spark = spark
         self.work = workdir
+        self._schemas: dict[str, StructType] = {}
         for d in ("ods_log", "ods_db", "ods_config", "dwd", "dwd_facts",
                   "dim", "dws", "ck"):
             os.makedirs(os.path.join(workdir, d), exist_ok=True)
@@ -209,13 +211,8 @@ class Warehouse:
         directly (partition pruning on sink_table), so the job's
         checkpoint tracks the real topic files — re-runs without new
         ODS input process nothing (exactly-once)."""
-        schema = self.spark.read.option(
-            "basePath", self._p("dwd_facts")).parquet(
-            self._p("dwd_facts")).schema
-        rows = (self.spark.readStream.schema(schema)
-                .option("basePath", self._p("dwd_facts"))
-                .parquet(self._p("dwd_facts"))
-                .filter(F.col("sink_table") == f"dwd_{table}"))
+        rows = self._parquet_stream(self._p("dwd_facts")).filter(
+            F.col("sink_table") == f"dwd_{table}")
         return (rows.select(F.from_json(
             "data", gmall_dwm.FACT_SCHEMAS[table]).alias("d"))
             .select("d.*"))
@@ -226,10 +223,10 @@ class Warehouse:
         od_s = self.typed_fact_stream("order_detail")
         wide = gmall_dwm.order_wide_join(oi_s, od_s, streaming=True)
 
-        dims = self.dims()
-
         def sink(batch: DataFrame, bid: int) -> None:
-            enriched = gmall_dwm.enrich_order_wide(batch, dims)
+            # dims as of this batch: a dim row merged while the query
+            # runs enriches every later batch
+            enriched = gmall_dwm.enrich_order_wide(batch, self.dims())
             sinks.write_idempotent(enriched, bid,
                                    self._p("dwd", "dwm_order_wide"))
 
@@ -246,9 +243,17 @@ class Warehouse:
         self._drain_to(wide, self._p("dwd", "dwm_payment_wide"),
                        "payment_wide")
 
+    def _schema(self, path: str) -> StructType:
+        """The schema of the topic table at ``path``, inferred from a
+        footer on first use and then kept: a topic's columns are fixed
+        by the job that writes it, so each query start and each read
+        of it needs no inference job."""
+        if path not in self._schemas:
+            self._schemas[path] = self.spark.read.parquet(path).schema
+        return self._schemas[path]
+
     def _parquet_stream(self, path: str) -> DataFrame:
-        schema = self.spark.read.parquet(path).schema
-        return (self.spark.readStream.schema(schema)
+        return (self.spark.readStream.schema(self._schema(path))
                 .option("basePath", path).parquet(path))
 
     # ------------------------------------------------------------ DWS
@@ -257,7 +262,9 @@ class Warehouse:
         Spark tracks the min watermark across inputs), additive window
         reduce in append mode. Only watermark-closed windows are
         emitted."""
-        page_static = self.spark.read.parquet(self._p("dwd", "log_page"))
+        page_path = self._p("dwd", "log_page")
+        page_static = self.spark.read.schema(self._schema(page_path)) \
+            .parquet(page_path)
         unioned = gmall_dws.visitor_stats_union(
             self.page_stream(),
             self._parquet_stream(self._p("dwd", "dwm_unique_visit"))
@@ -322,8 +329,9 @@ class Warehouse:
 
     # ------------------------------------------------------------ serving
     def _product_stats(self) -> DataFrame:
-        return self.spark.read.parquet(
-            self._p("dws", "product_stats_stream")).drop("batch_id")
+        path = self._p("dws", "product_stats_stream")
+        return self.spark.read.schema(self._schema(path)).parquet(path) \
+            .drop("batch_id")
 
     def gmv(self, date: str) -> DataFrame:
         """GMV for one day (ProductStatsMapper.java:13-14) from

@@ -248,6 +248,126 @@ def test_upsert_dim_crash_between_bucket_renames(spark, tmp_path,
     assert _no_merge_debris(table)
 
 
+def test_upsert_dim_crash_after_schema_grows(spark, tmp_path, monkeypatch):
+    """A merge that adds a column records the wider schema before it
+    publishes any bucket: killed at its first bucket swap, the table
+    reads exactly its old rows with the new column all null (no
+    staged or set-aside row), and re-running the merge gives exactly
+    the uncrashed rows and schema."""
+    from gmall_flink_2021_spark.streaming import sinks
+
+    base = spark.createDataFrame([(i, f"v{i}") for i in range(40)],
+                                 "id long, name string")
+    batch = spark.createDataFrame(
+        [(i, f"w{i}", f"#{i}") for i in range(0, 40, 3)]
+        + [(100, "new", "#0")], "id long, name string, hex string")
+
+    def read(path):
+        df = sinks.read_dim(spark, path)
+        return df.schema, sorted(tuple(r) for r in df.collect())
+
+    clean = str(tmp_path / "dim_widen_uncrashed")
+    sinks.upsert_dim(base, clean)
+    sinks.upsert_dim(batch, clean)
+    table = str(tmp_path / "dim_widen")
+    sinks.upsert_dim(base, table)
+
+    def crash_before_first_swap(fs, stage, live, prev):
+        raise RuntimeError("injected crash")
+
+    monkeypatch.setattr(sinks, "_swap_in", crash_before_first_swap)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        sinks.upsert_dim(batch, table)
+    monkeypatch.undo()
+    schema, rows = read(table)
+    assert schema == read(clean)[0]
+    assert rows == sorted((i, f"v{i}", None) for i in range(40))
+    sinks.upsert_dim(batch, table)
+    assert read(table) == read(clean)
+    assert _no_merge_debris(table)
+
+
+def test_upsert_dim_recovers_a_schema_cut_mid_write(spark, tmp_path):
+    """The recorded schema is replaced by temp file, delete, rename.
+    Killed after the delete, the table still reads under the new
+    schema and the next merge renames it in; a temp file cut short by
+    a first merge (no bucket published yet) is dropped."""
+    import os
+
+    from gmall_flink_2021_spark.streaming import sinks
+
+    def read(path):
+        df = sinks.read_dim(spark, path)
+        return df.columns, sorted(tuple(r) for r in df.collect())
+
+    table = str(tmp_path / "dim_schema_cut")
+    sinks.upsert_dim(spark.createDataFrame(
+        [(i, f"v{i}") for i in range(20)], "id long, name string"), table)
+    sinks.upsert_dim(spark.createDataFrame(
+        [(1, "w1", "#1")], "id long, name string, hex string"), table)
+    want = read(table)
+    # the state after the delete: the new schema (and the checksum a
+    # local Hadoop FS keeps beside it) only under the temp name
+    f = sinks.DIM_SCHEMA_FILE
+    for old, cut in ((f, f"{f}.tmp"), (f".{f}.crc", f".{f}.tmp.crc")):
+        if os.path.exists(os.path.join(table, old)):
+            os.rename(os.path.join(table, old), os.path.join(table, cut))
+    assert read(table) == want
+    sinks.upsert_dim(spark.createDataFrame(
+        [(2, "w2")], "id long, name string"), table)
+    assert os.path.exists(os.path.join(table, f))
+    assert not os.path.exists(os.path.join(table, f"{f}.tmp"))
+    assert read(table)[0] == want[0]
+
+    fresh = str(tmp_path / "dim_first_cut")
+    os.makedirs(fresh)
+    with open(os.path.join(fresh, sinks.DIM_SCHEMA_FILE + ".tmp"),
+              "w") as fh:
+        fh.write('{"fields":[{"metadata":{},"name":"id"')
+    with pytest.raises(FileNotFoundError):
+        sinks.read_dim(spark, fresh)
+    sinks.upsert_dim(spark.createDataFrame(
+        [(7, "x")], "id long, name string"), fresh)
+    assert read(fresh) == (["id", "name"], [(7, "x")])
+
+
+def test_read_dim_launches_no_job(spark, tmp_path):
+    """A dim read is a file listing under the recorded schema: after
+    a column-adding merge into a multi-bucket table, neither read_dim
+    nor Warehouse.dims() launches a Spark job, and the new column
+    reads in recorded order, null on the rows that predate it."""
+    import os
+
+    from gmall_flink_2021_spark.streaming import sinks
+    from gmall_flink_2021_spark.streaming.warehouse import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path / "wh"), [])
+    table = os.path.join(wh.work, "dim", "dim_color")
+    sinks.upsert_dim(spark.createDataFrame(
+        [(i, f"v{i}") for i in range(40)], "id long, name string"), table)
+    sinks.upsert_dim(spark.createDataFrame(
+        [(100, "new", "#fff")], "id long, name string, hex string"), table)
+    assert sum(d.startswith(f"{sinks.DIM_BUCKET_COL}=")
+               for d in os.listdir(table)) >= 2
+
+    def next_job_id():
+        return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+    before = next_job_id()
+    dim = sinks.read_dim(spark, table)
+    assert dim.columns == ["id", "name", "hex"]
+    assert next_job_id() - before == 0
+    before = next_job_id()
+    dims = wh.dims()
+    assert list(dims) == ["color"]
+    assert dims["color"].columns == ["id", "name", "hex"]
+    assert next_job_id() - before == 0
+    rows = dim.collect()
+    assert next_job_id() > before, "the probe must see a collect's job"
+    assert sorted(tuple(r) for r in rows) == sorted(
+        [(i, f"v{i}", None) for i in range(40)] + [(100, "new", "#fff")])
+
+
 def test_uv_sketch_rollup_streaming_matches_batch(spark, tmp_path):
     """Sketch-rollup ingest as a stream: per-micro-batch daily HLL
     sketches union-merged into the store must yield EXACTLY the batch

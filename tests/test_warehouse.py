@@ -127,6 +127,69 @@ def test_warehouse_end_to_end(spark, tmp_path):
     assert read("dwd", "dwm_order_wide").count() == before
 
 
+def test_order_wide_reads_dims_per_batch(spark, tmp_path, monkeypatch):
+    """A dim row merged while an order-wide query runs enriches every
+    later batch of that query: the dims are read per micro-batch, not
+    once when the query starts. Each fact file is its own batch here;
+    sku 99 is merged after the first batch is written, and order 11,
+    the one order that buys it, lands in a later batch."""
+    import json
+
+    from pyspark.sql.streaming import DataStreamReader
+
+    work = str(tmp_path / "wh_ow_dims")
+    wh = Warehouse(spark, work, fx.table_process_rows())
+    _load_fixture(work)
+    wh.run_base_db()
+    t = datetime.datetime.utcfromtimestamp(
+        (fx.BASE_TS + 11 * fx.MINUTE) / 1000).strftime("%Y-%m-%d %H:%M:%S")
+    order = {"id": 11, "province_id": 1, "order_status": "1001",
+             "user_id": 101, "total_amount": 80.0,
+             "activity_reduce_amount": 0, "coupon_reduce_amount": 0,
+             "original_total_amount": 80.0, "feight_fee": 5,
+             "expire_time": t, "create_time": t, "operate_time": t}
+    detail = {"id": 110, "order_id": 11, "sku_id": 99, "order_price": 80.0,
+              "sku_num": 1, "sku_name": "sku 99", "create_time": t,
+              "split_total_amount": 80.0, "split_activity_amount": 0,
+              "split_coupon_amount": 0}
+    with open(os.path.join(work, "ods_db", "changelog-1.jsonl"), "w") as f:
+        for table, data in (("order_info", order), ("order_detail", detail)):
+            f.write(json.dumps(fx._cdc(table, "insert", data)) + "\n")
+    wh.run_base_db()
+
+    sku = wh.dim("dim_sku_info")
+    row = sku.filter(F.col("id") == 1).collect()[0].asDict()
+    late_sku = spark.createDataFrame(
+        [tuple({**row, "id": 99, "sku_name": "late sku"}[c]
+               for c in sku.columns)], sku.schema)
+    real_parquet, real_write = DataStreamReader.parquet, \
+        sinks.write_idempotent
+    merged_after = []
+
+    def one_file_per_batch(reader, path, **kw):
+        return real_parquet(reader.option("maxFilesPerTrigger", 1), path,
+                            **kw)
+
+    def write_then_merge_sku(df, bid, path):
+        real_write(df, bid, path)
+        if not merged_after:
+            sinks.upsert_dim(late_sku, os.path.join(work, "dim",
+                                                    "dim_sku_info"))
+            merged_after.append(bid)
+
+    monkeypatch.setattr(DataStreamReader, "parquet", one_file_per_batch)
+    monkeypatch.setattr(sinks, "write_idempotent", write_then_merge_sku)
+    wh.run_order_wide()
+    monkeypatch.undo()
+
+    got = (spark.read.parquet(os.path.join(work, "dwd", "dwm_order_wide"))
+           .filter(F.col("order_id") == 11).collect())
+    assert got and all(r.batch_id > merged_after[0] for r in got)
+    assert {(r.dim_sku_name, r.tm_name) for r in got} == {
+        ("late sku", wh.dim("dim_base_trademark")
+         .filter(F.col("id") == row["tm_id"]).collect()[0].tm_name)}
+
+
 def test_drain_reraises_sink_failure_and_leaves_no_query(spark, tmp_path):
     """A sink that raises fails its query: sinks.drain re-raises the
     error to the caller and no streaming query is left running."""
