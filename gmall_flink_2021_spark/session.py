@@ -6,12 +6,38 @@ cluster and let AQE coalesce at runtime; locally we default to the
 core count. All settings here are safe on a 1000-executor cluster:
 AQE handles skew and partition coalescing, broadcast joins cover the
 reference's async dim-lookup pattern (SURVEY.md §2.4 J3).
+
+Local file system. Without libhadoop, Hadoop's local FS forks a
+``chmod`` for every file and directory it creates, and FileContext
+(which Spark's default checkpoint manager uses) forks ``readlink`` on
+both ends of every rename. Every streaming micro-batch writes offset,
+commit, source-log and state files, and every sink and dim-bucket swap
+adds its own, so a warehouse chain spent most of its process creations
+there. ``get_spark`` therefore compiles ``jvm/NioLocalFs.java`` once
+per source (``javac`` against pyspark's Hadoop client API, cached in a
+directory under ``tempfile.gettempdir()``) and puts it on the driver
+classpath as ``fs.file.impl`` and ``fs.AbstractFileSystem.file.impl``:
+the same local FS with the chmod and link-status calls made through
+``java.nio``. Checksums (``.crc`` siblings), mode bits and
+FileContext's exclusive ``rename(..., NONE)`` are kept, so Spark's
+default FileContext checkpoint manager stays. Only ``file://`` paths
+are affected. Without ``javac`` the session starts on the stock FS and
+warns once; sessions created elsewhere (the driver's own, through
+``harden``) keep the stock FS.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import warnings
 
+import pyspark
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Defaults chosen for the local[32] test rig; on a real cluster the
@@ -56,6 +82,70 @@ _DEFAULTS = {
 }
 
 
+_LOCAL_FS_SOURCE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "NioLocalFs.java")
+_LOCAL_FS_CLASS = "gmall.fs.NioLocalFs"
+
+
+def build_local_fs(source: str = _LOCAL_FS_SOURCE) -> str | None:
+    """Compile the local-FS shim and return its class directory, or
+    None (with a warning) when it cannot be built here.
+
+    The directory is keyed by the source and the Hadoop client jar, so
+    a second build of the same source runs no ``javac``. It is compiled
+    into a temp dir and renamed into place, so a concurrent build never
+    sees a half-written one.
+    """
+    javac = shutil.which("javac")
+    jars = sorted(glob.glob(os.path.join(
+        os.path.dirname(pyspark.__file__), "jars", "hadoop-client-api-*.jar")))
+    if javac is None or not jars:
+        warnings.warn("javac or pyspark's Hadoop client jar not found: the "
+                      "session uses Hadoop's stock local FS, which forks a "
+                      "shell per file created or renamed", RuntimeWarning)
+        return None
+    with open(source, "rb") as fh:
+        digest = hashlib.sha256(fh.read())
+    digest.update(os.path.basename(jars[-1]).encode())
+    root = tempfile.gettempdir()
+    out = os.path.join(root, f"gmall-nio-local-fs-{digest.hexdigest()[:16]}")
+    if os.path.isdir(out):
+        return out
+    tmp = tempfile.mkdtemp(prefix="gmall-nio-local-fs-build-", dir=root)
+    try:
+        subprocess.run([javac, "--release", "17", "-nowarn", "-cp", jars[-1],
+                        "-d", tmp, source], check=True, capture_output=True)
+        os.rename(tmp, out)
+    except subprocess.CalledProcessError as exc:
+        warnings.warn("compiling the local-FS shim failed, the session uses "
+                      "Hadoop's stock local FS: "
+                      + exc.stderr.decode(errors="replace"), RuntimeWarning)
+        return None
+    except OSError:
+        if not os.path.isdir(out):  # not a concurrent build that won
+            raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out
+
+
+def _local_fs_conf() -> dict[str, str]:
+    """The confs that put the shim under ``file://``; empty when the
+    driver JVM is already up (its classpath is fixed, so it may not
+    hold the shim) or no shim can be built."""
+    if SparkContext._gateway is not None:
+        return {}
+    classes = build_local_fs()
+    if classes is None:
+        return {}
+    return {
+        "spark.driver.extraClassPath": classes,
+        "spark.hadoop.fs.file.impl": f"{_LOCAL_FS_CLASS}$FileSystem",
+        "spark.hadoop.fs.AbstractFileSystem.file.impl":
+            f"{_LOCAL_FS_CLASS}$Fs",
+    }
+
+
 def get_spark(app_name: str = "gmall-spark", master: str | None = None,
               extra: dict[str, str] | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine defaults."""
@@ -63,6 +153,7 @@ def get_spark(app_name: str = "gmall-spark", master: str | None = None,
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]")
     conf = dict(_DEFAULTS)
+    conf.update(_local_fs_conf())
     if extra:
         conf.update(extra)
     for k, v in conf.items():
