@@ -17,7 +17,8 @@ Layout:
   operators/    — the engine's operator library: dwd/dwm/dws layers,
                   serving queries, dedup, similarity, text stats
   plans/        — the query registry (queries + DuckDB oracle SQL)
-  streaming/    — Structured Streaming jobs + stateful operators
+  streaming/    — the warehouse topology (warehouse.py), its sinks
+                  and query runner (sinks.py), stateful operators
 """
 
 __version__ = "0.1.0"

@@ -873,10 +873,8 @@ def daily_value_zscores(events: DataFrame, trailing: int = 7,
 def score_daily_cents(daily: DataFrame, trailing: int = 7,
                       min_prior: int = 3) -> DataFrame:
     """The shared scoring half of daily_value_zscores: trailing-frame
-    mean/variance/z over a (event_type, day, cents) frame — ONE
-    definition consumed by the batch operator and the streaming
-    monitor's read side (streaming/jobs.zscores_from_daily_store), so
-    the two can never diverge on the arithmetic."""
+    mean/variance/z over a (event_type, day, cents) frame, kept
+    apart from the daily cent sums it reads."""
     daily = daily.withColumn(
         "cents_sq",
         F.col("cents").cast("decimal(38,0)") * F.col("cents"))
@@ -1052,11 +1050,10 @@ def scd2_enrich(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     carry-forward merge (one order-keyed shuffle). Facts shipping
     before their key's first version (the synthetic corpus has many)
     get the explicit 'pre-order' category rather than silently
-    inheriting anything. Also the per-micro-batch kernel of
-    streaming/jobs.scd2_enrich_stream — effective status depends
-    only on the fact row and the static version table, so batching
-    cannot change any row's assignment (Flink's temporal-table-join
-    semantics, FOR SYSTEM_TIME AS OF, on a static dim)."""
+    inheriting anything. Effective status depends only on the fact
+    row and the static version table, so batching cannot change any
+    row's assignment (Flink's temporal-table-join semantics, FOR
+    SYSTEM_TIME AS OF, on a static dim)."""
     # SCD2 date domain (seeded relational fuzz, round 9): a version
     # with NULL eff_from is effective from nothing — in the window
     # form it would sort NULLS FIRST and poison every later fact,

@@ -110,9 +110,7 @@ def minhash_dedup_marks(
     """Online-ingestion dedup decision, batch form: in doc_id
     (arrival) order, a document is a duplicate if ANY of its LSH band
     buckets was already occupied by an earlier document — the
-    first-seen-wins rule a streaming ingester applies
-    (`streaming/jobs.minhash_dedup_stream` is the incremental form;
-    this is its oracle). Returns every document with an ``is_dup``
+    first-seen-wins rule a streaming ingester applies. Returns every document with an ``is_dup``
     mark and the earliest colliding predecessor.
 
     Unlike `minhash_band_pairs` (enumerates candidate PAIRS — m²-ish
@@ -856,27 +854,6 @@ def span_hashes(documents: DataFrame, width: int = 64,
                                       F.lit(width))).alias("h")))
 
 
-def duplicate_spans_vs_prior(documents: DataFrame, width: int = 64,
-                             stride: int = 16) -> DataFrame:
-    """Arrival-order form of `duplicate_spans`: a span of doc d is a
-    duplicate iff some EARLIER document (smaller doc_id) contains the
-    same text window — "how much of this new doc is already in the
-    corpus", the ingestion-time variant a streaming pipeline asks.
-    (`duplicate_spans` is symmetric: both sides of a shared span are
-    flagged; this form never flags the first occurrence.)
-
-    Same scale shape: scan-side fan-out, one min-agg shuffle keyed by
-    span hash, one linear join back, one doc_id agg."""
-    spans = span_hashes(documents, width, stride)
-    first = spans.groupBy("h").agg(F.min("doc_id").alias("first_doc"))
-    return (spans.join(first, "h")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("total_spans"),
-                 F.sum((F.col("first_doc") < F.col("doc_id"))
-                       .cast("long")).alias("dup_spans"))
-            .filter(F.col("dup_spans") > 0))
-
-
 def dedup_provenance(
         documents: DataFrame) -> tuple[DataFrame, CacheHandle]:
     """Dedup PROVENANCE matrix: for every document marked duplicate by
@@ -1011,9 +988,8 @@ def _novelty_classify(batch_idx: DataFrame,
     given as fused (doc_id, fp, h0..h7) index frames
     (snapshot_index / the persisted store). Per-doc output depends
     only on the doc and the static snapshot, so it is
-    batching-invariant — the streaming form
-    (`streaming/jobs.novelty_gate_stream`) calls this per micro-batch
-    and the union equals the batch operator.
+    batching-invariant: classifying a corpus in slices gives the
+    union of the per-slice answers.
 
     One-evaluation dataflow (r11): the snapshot index is consumed
     exactly twice (per-fp exact aggregate; band buckets) and the
@@ -1235,9 +1211,8 @@ def near_dup_rate_by_source(
 def near_dup_rate_partials(marks: DataFrame,
                            documents: DataFrame) -> DataFrame:
     """(source, doc_ct, dup_ct) partial counters from a marks frame —
-    the shared half of the batch report above and the per-micro-batch
-    emission of streaming/jobs.near_dup_rate_stream (one shared shape
-    so the streaming store can never fork from the batch contract)."""
+    the additive half of the batch report above (near_dup_rate_readout
+    sums them)."""
     return (marks.select("doc_id", "is_dup")
             .join(documents.select("doc_id", "source"), "doc_id")
             .groupBy("source")

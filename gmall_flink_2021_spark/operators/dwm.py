@@ -374,10 +374,8 @@ def rolling_uv_sketches(events: DataFrame,
     sketch-once/roll-up-many contract as uv_sketch_rollup, applied to
     a sliding frame: the union runs as a RANGE window (interval
     N−1 days preceding) over the O(days) sketch table, so calendar
-    gaps still union exactly the days inside the window, and the
-    incremental streaming store (streaming/jobs.uv_sketch_stream)
-    feeds the identical rollup because HLL registers are per-item
-    maxes. No SQL oracle (sketch encodings); the driver records
+    gaps still union exactly the days inside the window. No SQL
+    oracle (sketch encodings); the driver records
     rows-only and tests/test_sketch_accuracy.py gates both estimates
     against exact distinct counts at ~3σ (registry.SKETCH_GATES)."""
     return rolling_uv_from_daily(uv_daily_sketches(events),
@@ -387,11 +385,9 @@ def rolling_uv_sketches(events: DataFrame,
 def rolling_uv_from_daily(daily: DataFrame,
                           window_days: int = 7) -> DataFrame:
     """Rolling rollup over an existing daily-sketch table — the read
-    half shared by the batch path above and the incrementally
-    maintained streaming store (streaming/jobs.uv_sketch_stream):
-    because HLL union is the store's merge op AND the rollup op, the
-    streamed store rolls up EXACTLY equal to the batch single-pass
-    sketches (asserted, not approximately, in test_streaming)."""
+    half of rolling_uv_sketches above: HLL union is both the merge op
+    and the rollup op, so any daily-sketch table built by union
+    rolls up exactly like the single-pass sketches."""
     w = (Window.orderBy(F.unix_timestamp(F.col("day")))
          .rangeBetween(-(window_days - 1) * 86_400, 0))
     return (daily.select(
@@ -416,7 +412,5 @@ def uv_sketch_rollup(events: DataFrame) -> DataFrame:
     The monthly union is a WINDOW aggregate over the daily sketches,
     not a join back — one events scan, one partial/final sketch
     aggregation, then a month-keyed exchange of O(days) sketch rows
-    (the join formulation aggregated the raw events twice). Streaming
-    form: streaming/jobs.uv_sketch_stream maintains the daily-sketch
-    store via foreachBatch union-merge; this same rollup reads it."""
+    (the join formulation aggregated the raw events twice)."""
     return uv_rollup_from_daily(uv_daily_sketches(events))

@@ -29,44 +29,15 @@ from ..functions import money
 from ..functions.timeutil import dated, window_stamps
 
 
-def _uv_expr(streaming: bool, approx_uv: bool):
-    """Distinct-user expression for the windowed stats operators.
-
-    Exact streaming mode (collect_set) keeps every distinct user of a
-    still-open (window, key) group in state — the reference does the
-    same with a Set accumulator (bean/ProductStats.java:74-85), and it
-    is exact, but state grows with the true per-group cardinality: fine
-    at the reference's per-mid grain (≤ visitors per 10 s window),
-    unbounded at corpus-scale keys. ``approx_uv=True`` swaps in
-    approx_count_distinct (HyperLogLog++, rsd 2%): constant ~kB state
-    per group regardless of cardinality — the 100 TB setting, with the
-    error band gated quantitatively by the dwm sketch tests."""
-    if approx_uv:
-        return F.approx_count_distinct("user_id").cast("long")
-    if streaming:
-        return F.size(F.collect_set("user_id")).cast("long")
-    return F.countDistinct("user_id")
-
-
 def visitor_stats_window(events: DataFrame,
-                         window_duration: str = "10 minutes",
-                         streaming: bool = False,
-                         approx_uv: bool = False) -> DataFrame:
+                         window_duration: str = "10 minutes") -> DataFrame:
     """Tumbling-window stats keyed by event_type (A2/A3 analog).
 
     pv_ct = events in window, uv_ct = distinct users, value_sum =
     exact decimal sum of `value`. stt/edt are the window bounds, as in
-    VisitorStats (bean/VisitorStats.java:11-36).
-
-    ``streaming=True`` computes the distinct count via collect_set —
-    exact within a window and supported by streaming aggregation
-    (the reference keeps a Set in the accumulator the same way:
-    bean/ProductStats.java:74-85, SURVEY §2.5 A4); batch mode uses
-    countDistinct, which plans a partial/final hash aggregate.
-    See ``_uv_expr`` for the state bound and the ``approx_uv``
-    constant-state alternative.
+    VisitorStats (bean/VisitorStats.java:11-36). The distinct count
+    is countDistinct, which plans a partial/final hash aggregate.
     """
-    uv = _uv_expr(streaming, approx_uv)
     # dated() is explicit though window() already drops NULL event
     # times — the oracle mirrors the same filter
     return (
@@ -74,7 +45,7 @@ def visitor_stats_window(events: DataFrame,
         .groupBy(F.window("ts", window_duration), "event_type")
         .agg(
             F.count(F.lit(1)).alias("pv_ct"),
-            uv.alias("uv_ct"),
+            F.countDistinct("user_id").alias("uv_ct"),
             F.sum(money("value")).alias("value_sum"),
         )
         .select(*window_stamps(), "event_type", "pv_ct", "uv_ct",
@@ -172,23 +143,19 @@ def province_stats_sql(spark, orders: DataFrame, customer: DataFrame,
 
 def visitor_stats_sliding(events: DataFrame,
                           size: str = "10 minutes",
-                          slide: str = "5 minutes",
-                          streaming: bool = False,
-                          approx_uv: bool = False) -> DataFrame:
+                          slide: str = "5 minutes") -> DataFrame:
     """Hopping/sliding-window stats keyed by event_type — the sliding
     sibling of ``visitor_stats_window`` (SURVEY §2.9 O11 notes the
     reference is tumbling-only; Spark gives hopping windows in the
     same ``window()`` call). With size = 2×slide every event lands in
     exactly two overlapping windows; Spark plans this as one Expand
     (×2) feeding the same partial/final hash aggregate as the
-    tumbling form — no extra shuffle versus tumbling. See ``_uv_expr``
-    for the streaming state bound and the ``approx_uv`` alternative.
+    tumbling form — no extra shuffle versus tumbling.
     """
-    uv = _uv_expr(streaming, approx_uv)
     return (dated(events)
             .groupBy(F.window("ts", size, slide), "event_type")
             .agg(F.count(F.lit(1)).alias("pv_ct"),
-                 uv.alias("uv_ct"),
+                 F.countDistinct("user_id").alias("uv_ct"),
                  F.sum(money("value")).alias("value_sum"))
             .select(*window_stamps(), "event_type", "pv_ct", "uv_ct",
                     F.col("value_sum").cast("decimal(18,2)")

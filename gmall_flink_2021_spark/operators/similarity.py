@@ -254,9 +254,8 @@ def ivf_search(corpus: DataFrame, queries: DataFrame,
                n_probe: int = 1,
                exclude_self: bool = True) -> DataFrame:
     """IVF search against a PREBUILT index: ``cents`` is the coarse
-    quantizer (label_centroids output, built once — the serving
-    placement `streaming/jobs.ann_query_stream` exploits), ``queries``
-    is (query_id, vec_q). Each query probes its ``n_probe`` nearest
+    quantizer (label_centroids output, built once and reused across
+    query sets), ``queries`` is (query_id, vec_q). Each query probes its ``n_probe`` nearest
     centroids and searches only those label partitions; queries
     broadcast into the corpus scan, never the reverse.
 

@@ -367,10 +367,9 @@ def contamination_check(documents: DataFrame,
     Spark-first shape: both sides explode to (doc, shingle-hash) and
     meet in ONE equi-join on the 64-bit shingle key (an inverted
     index, never doc×doc pairs); overlap counts aggregate map-side.
-    Streaming form: the same ``contamination_against`` scoring runs
-    per micro-batch against the static index
-    (streaming/jobs.contamination_stream) — per-doc scores are
-    independent, so streaming == batch row-for-row.
+    Per-doc scores (``contamination_against``) depend only on the doc
+    and the static index, so scoring a corpus in slices gives the
+    same rows.
     """
     corpus = documents.filter(F.col("doc_id") % benchmark_mod != 0)
     return contamination_against(
@@ -945,10 +944,9 @@ def training_shard_plan(documents: DataFrame,
 
 def funnel_gates(documents: DataFrame) -> DataFrame:
     """THE per-document gate projection of the cleaning pipeline —
-    the single definition consumed by corpus_funnel (the report),
-    corpus_survivors (the release), and streaming
-    corpus_funnel_stream (the partials), so the three can never
-    disagree on thresholds. Columns: doc_id, source, n_tokens,
+    the single definition consumed by corpus_funnel (the report) and
+    corpus_survivors (the release), so the two can never disagree on
+    thresholds. Columns: doc_id, source, n_tokens,
     g_lang, g_len, g_quality."""
     tok = tokens("text")
     n = F.size(tok)
@@ -1345,10 +1343,7 @@ def hashed_classifier_scores(documents: DataFrame,
     table joins by BROADCAST (dim is classifier-sized, ~10⁴–10⁶ rows
     — always broadcast territory; left join so the null-term row
     survives), and the per-doc logit is one map-side-combined sum.
-    At 100 TB nothing shuffles except doc_id-keyed partial sums.
-    Streaming form: scoring is per-doc stateless, so the
-    contamination_stream pattern (static broadcast side + micro-batch
-    scoring) applies verbatim."""
+    At 100 TB nothing shuffles except doc_id-keyed partial sums."""
     spark = documents.sparkSession
     # the bucket derivation below is fixed at 3 md5 nibbles → domain
     # exactly [0, CLASSIFIER_DIM); a weight table over a different
@@ -1505,8 +1500,8 @@ def bpe_merges(documents: DataFrame,
 def bpe_vocab_encoder(vocab: DataFrame) -> DataFrame:
     """(word, n_sym) encode table from a trained vocabulary's
     ';'-separated symbol strings — the single derivation every encode
-    path (batch stats, merge replay, the serving stream) shares, so
-    OOV/separator semantics cannot drift between them."""
+    path (batch stats, merge replay) shares, so OOV/separator
+    semantics cannot drift between them."""
     return vocab.select(
         "word",
         (F.size(F.split("sym", ";")) - 1).cast("long").alias("n_sym"))
@@ -1516,9 +1511,8 @@ def encode_with_vocab(documents: DataFrame, enc: DataFrame) -> DataFrame:
     """Per-doc (n_tokens, n_symbols) under a (word, n_sym) encode
     table: one token fan-out, one broadcast-hash join, one doc
     aggregation. Words absent from the table (separator-unsafe /
-    OOV) count as 1 atomic symbol. Shared by bpe_encode_stats,
-    bpe_apply_merges and streaming/jobs.bpe_encode_stream so the
-    serving and batch paths are provably identical."""
+    OOV) count as 1 atomic symbol. Shared by bpe_encode_stats and
+    bpe_apply_merges so the two paths are provably identical."""
     return (documents
             .select("doc_id", F.explode(tokens("text")).alias("word"))
             .join(F.broadcast(enc), "word", "left")
@@ -1703,16 +1697,13 @@ def script_mix_stats(documents: DataFrame) -> DataFrame:
 
     Scale shape: pure per-row column expressions folded into the scan
     + one map-side-combined groupBy(source) — no shuffle beyond the
-    |sources|-row aggregate, no UDF. Split as partials → readout so
-    the streaming form (jobs.script_mix_stream) appends the identical
-    counter partials per micro-batch.
+    |sources|-row aggregate, no UDF. Split as partials → readout.
     """
     return script_mix_readout(script_mix_partials(documents))
 
 
 def script_mix_partials(documents: DataFrame) -> DataFrame:
-    """Additive per-source counter partials of script_mix_stats — the
-    micro-batch emission of streaming/jobs.script_mix_stream: every
+    """Additive per-source counter partials of script_mix_stats: every
     column is a sum/count, so partials from any corpus split
     re-aggregate (script_mix_readout) to exactly the single-pass
     report."""
@@ -1770,9 +1761,7 @@ def token_fertility_stats(documents: DataFrame) -> DataFrame:
     this report makes that visible per lang instead of anecdotally).
 
     Integer-exact permille counts; one scan + one tiny aggregate,
-    same shape as token_stats. Split as partials → readout so the
-    streaming form (jobs.token_fertility_stream) appends the
-    identical counter partials per micro-batch.
+    same shape as token_stats. Split as partials → readout.
     """
     return token_fertility_readout(token_fertility_partials(documents))
 

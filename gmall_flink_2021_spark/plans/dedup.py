@@ -143,7 +143,7 @@ def q_duplicate_spans(spark, sf):
 def q_minhash_dedup_marks(spark, sf):
     """Gates: the online-ingestion dedup DECISION (bucket-first ranking,
     O(corpus) output on any duplication level) vs the pair-enumeration
-    family; batch oracle of streaming/jobs.minhash_dedup_stream."""
+    family."""
     (documents,) = _t(spark, sf, "documents")
     out, h = dedup.minhash_dedup_marks(documents)
     h.unpersist()  # lazy: recompute-on-reuse

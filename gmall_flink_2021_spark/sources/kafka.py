@@ -1,10 +1,10 @@
 """Kafka source/sink wiring (S1/S6/K1/K2).
 
 No broker exists in the test environment, so these builders return
-the configured reader without starting it; the file-backed
-sources in streaming/jobs.py present the identical
-``value: string`` surface to every operator, which is what makes the
-operator layer transport-agnostic. The option sets and the dynamic
+the configured reader without starting it; the warehouse's
+file-backed ODS sources (streaming/warehouse.py) present the
+identical ``value: string`` surface to every operator, which is what
+makes the operator layer transport-agnostic. The option sets and the dynamic
 topic routing are plain-Python/DataFrame constructions so the
 contract is pinned by test (tests/test_sources_and_sql.py) even
 without a broker. Reference parity:

@@ -17,10 +17,10 @@ writers with Spark-managed parquet tables.
    published, so a read is a file listing with no footer job; a
    bucket older than a column reads it as null.
 
-Every streaming job runs through :func:`drain`. Both publishers —
-:func:`publish_store` (a whole store) and :func:`upsert_dim` (each
-touched dim bucket) — use one crash-safe rename protocol
-(:func:`_write_stage`, :func:`_swap_in`, :func:`_recover_swap`).
+Every streaming job runs through :func:`drain`. :func:`upsert_dim`
+publishes each touched dim bucket through one crash-safe rename
+protocol (:func:`_write_stage`, :func:`_swap_in`,
+:func:`_recover_swap`).
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ import json
 import os
 from typing import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -48,6 +48,21 @@ def drain(stream: DataFrame, sink: Callable[[DataFrame, int], None],
         q.awaitTermination()
     finally:
         q.stop()
+
+
+def with_row_audit(df: DataFrame, name: str = "row_audit") -> DataFrame:
+    """Attach an in-flight reconciliation metric to any stream (or
+    batch frame): rows seen and non-null keys, surfaced per
+    micro-batch through StreamingQueryProgress.observedMetrics —
+    production monitoring without a second scan or a side query. Pair
+    with the sink's own counts to detect silent row loss between
+    stages (the observability layer every ingest pipeline carries)."""
+    first = df.columns[0]
+    return df.observe(
+        name,
+        F.count(F.lit(1)).alias("rows_seen"),
+        F.sum(F.col(first).isNotNull().cast("long"))
+        .alias("first_col_nonnull"))
 
 
 def write_idempotent(df: DataFrame, batch_id: int, path: str) -> None:
@@ -101,16 +116,12 @@ def read_dim(spark, dim_path: str) -> DataFrame:
     return spark.read.schema(schema).parquet(dim_path).drop(DIM_BUCKET_COL)
 
 
-def upsert_dim(batch: DataFrame, dim_path: str, pk: str = "id",
-               order_col: str | None = None,
-               op_col: str | None = None) -> None:
+def upsert_dim(batch: DataFrame, dim_path: str, pk: str = "id") -> None:
     """K4 analog: merge a micro-batch into the dim table keyed on the
     sink_pk (default 'id', TableProcessFunction.java:71-73). Within a
-    batch the row with the highest ``order_col`` per key wins (falls
-    back to dropDuplicates when no ordering column exists); the
-    ordering column is changelog plumbing and does not land in the
-    table. Against the existing table new rows replace old rows with
-    the same pk (DimSinkFunction.java:56-69 upsert semantics).
+    batch one row per key is kept (dropDuplicates); against the
+    existing table new rows replace old rows with the same pk
+    (DimSinkFunction.java:56-69 upsert semantics).
 
     Incremental copy-on-write: the table is laid out as
     ``pkbucket=N`` hash-bucket partitions and a batch rewrites ONLY
@@ -121,9 +132,8 @@ def upsert_dim(batch: DataFrame, dim_path: str, pk: str = "id",
     ``<table>/_stage``, which readers never see (Spark's file listing
     skips ``_``-prefixed dirs). Each touched bucket is then published
     by :func:`_swap_in`, set aside under ``<table>/_prev`` while its
-    staged successor is renamed in; one with no surviving rows is
-    removed. Every merge first completes or undoes a crashed one
-    (:func:`_recover_buckets`).
+    staged successor is renamed in. Every merge first completes or
+    undoes a crashed one (:func:`_recover_buckets`).
 
     The table's schema lives in ``<table>/_schema.json``: the recorded
     columns in order, then any new column of the batch appended
@@ -133,42 +143,23 @@ def upsert_dim(batch: DataFrame, dim_path: str, pk: str = "id",
     a superset of every bucket's columns and :func:`read_dim` needs
     no footer.
 
-    With ``op_col`` set, the batch is a CDC changelog slice: the
-    latest row per pk decides — a 'delete' row removes the pk from
-    its bucket (the Maxwell/Debezium 'delete' the reference's DWD
-    layer filters OUT, BaseDBApp.java:42-56, here applied so a
-    replayed changelog CONVERGES to the source table — proven by the
-    snapshot_diff reconciliation test); anything else upserts. Apply
-    is idempotent per pk, so replaying a batch after a crash at any
-    point converges without markers: the buckets the crashed merge
-    already published lose and regain exactly the batch's keys."""
+    Replaying a batch after a crash at any point converges without
+    markers: the buckets the crashed merge already published lose and
+    regain exactly the batch's keys."""
     spark = batch.sparkSession
     fs, P = store_fs(spark, dim_path)
     stage = os.path.join(dim_path, "_stage")
     prev = os.path.join(dim_path, "_prev")
     _recover_buckets(fs, P, dim_path)
     recorded = _recorded_schema(fs, P, dim_path)
-    if order_col is not None:
-        w = Window.partitionBy(pk).orderBy(F.desc(order_col))
-        latest = (batch.withColumn("_rn", F.row_number().over(w))
-                  .filter(F.col("_rn") == 1).drop("_rn", order_col))
-    else:
-        latest = batch.dropDuplicates([pk])
-    latest = latest.withColumn(DIM_BUCKET_COL,
-                               dim_bucket(F.col(pk))).persist()
+    latest = batch.dropDuplicates([pk]).withColumn(
+        DIM_BUCKET_COL, dim_bucket(F.col(pk))).persist()
     try:
         # bounded collect: at most N_DIM_BUCKETS rows
         touched = [f"{DIM_BUCKET_COL}={b}" for b in sorted(
             r[0] for r in latest.select(DIM_BUCKET_COL).distinct()
             .collect())]
         merged = latest
-        if op_col is not None:
-            # null-safe: a dirty row with op=NULL must UPSERT (it
-            # carries a payload), not silently vanish — NULL !=
-            # 'delete' is NULL, which a plain filter would drop,
-            # deleting the key
-            merged = latest.filter(
-                ~F.col(op_col).eqNullSafe("delete")).drop(op_col)
         live = [os.path.join(dim_path, b) for b in touched
                 if fs.exists(P(os.path.join(dim_path, b)))]
         if live:
@@ -176,8 +167,8 @@ def upsert_dim(batch: DataFrame, dim_path: str, pk: str = "id",
             # evolve the dim's column set (the runtime-DDL path) —
             # new columns arrive as nulls on old rows, removed ones
             # stay null on new rows, mirroring Phoenix's additive
-            # ALTER behavior. The anti-join removes EVERY batch pk
-            # (deletes stay removed; upserts come back from merged).
+            # ALTER behavior. The anti-join removes every batch pk;
+            # its new row comes back from the union.
             existing = (spark.read.schema(recorded)
                         .option("basePath", dim_path).parquet(*live))
             merged = (existing.join(latest.select(pk), pk, "left_anti")
@@ -189,8 +180,7 @@ def upsert_dim(batch: DataFrame, dim_path: str, pk: str = "id",
                      .partitionBy(DIM_BUCKET_COL), fs, P, stage)
         fs.mkdirs(P(prev))
         for b in touched:
-            staged = P(os.path.join(stage, b))
-            _swap_in(fs, staged if fs.exists(staged) else None,
+            _swap_in(fs, P(os.path.join(stage, b)),
                      P(os.path.join(dim_path, b)),
                      P(os.path.join(prev, b)))
         fs.delete(P(stage), True)
@@ -281,73 +271,19 @@ def _recover_buckets(fs, P, dim_path: str) -> None:
     fs.delete(prev, True)
 
 
-def publish_store(staged_df: DataFrame, store_path: str) -> None:
-    """Atomic full-store publish for the merged-store streams
-    (uv_sketch_stream, heavy_hitter_stream): the earlier two-phase
-    copy (`read staging → overwrite store`) was not atomic — a crash
-    mid-republish left a partial-but-READABLE store in which every
-    surviving part file still carried the constant merged_bid column,
-    so the replayed batch saw `bid <= prior_bid` and skipped itself:
-    silent row loss with no loud failure.
-
-    Directory RENAME is atomic on POSIX and on HDFS (where
-    FileSystem.rename has the same contract) — all path operations
-    here go through Hadoop's FileSystem API, so a store on hdfs://
-    (or any Hadoop-supported filesystem) behaves identically to a
-    local one. An object store without atomic rename (s3a://) needs
-    the manifest variant instead — store an expected row count and
-    fail loud on mismatch. Sequence:
-
-      1. write the merged frame to ``store._stage`` (Spark stamps
-         _SUCCESS on job commit — the completeness witness);
-      2. rename the live store aside to ``store._prev``;
-      3. rename the stage in;
-      4. remove ``._prev``.
-
-    Every crash point is recoverable by :func:`recover_store`, which
-    callers run before each read: stage-without-_SUCCESS → discard
-    (store untouched, replay recomputes); store missing + complete
-    stage → finish the rename; store missing + ._prev only → roll
-    back. No state leaves a partial store readable."""
-    fs, P = store_fs(staged_df.sparkSession, store_path)
-    _write_stage(staged_df.write, fs, P, store_path + "._stage")
-    _swap_in(fs, P(store_path + "._stage"), P(store_path),
-             P(store_path + "._prev"))
-
-
 def store_fs(spark, path: str):
-    """(Hadoop FileSystem, Path constructor) for ``path`` — the
-    merged-store streams' path operations must work on any
-    Hadoop-supported filesystem (file:/, hdfs://), not just the
-    driver's local disk, so exists/rename/delete go through the JVM
-    FileSystem API rather than os.path/os.rename."""
+    """(Hadoop FileSystem, Path constructor) for ``path`` — the dim
+    store's path operations must work on any Hadoop-supported
+    filesystem (file:/, hdfs://), not just the driver's local disk,
+    so exists/rename/delete go through the JVM FileSystem API rather
+    than os.path/os.rename."""
     P = spark._jvm.org.apache.hadoop.fs.Path
     fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, P
 
 
-def recover_store(store_path: str) -> None:
-    """Crash recovery for :func:`publish_store` — call before reading
-    the store. Completes or rolls back an interrupted publish so the
-    reader only ever sees a store that was written whole."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("recover_store needs an active SparkSession")
-    fs, P = store_fs(spark, store_path)
-    stage, prev = P(store_path + "._stage"), P(store_path + "._prev")
-    _recover_swap(fs, stage, P(store_path), prev,
-                  fs.exists(P(store_path + "._stage/_SUCCESS")))
-    # a leftover stage next to a live store means the crash was
-    # before rename-aside: the store is intact, the replayed batch
-    # recomputes — discard the stage either way
-    fs.delete(stage, True)
-    fs.delete(prev, True)
-
-
-# The one rename protocol behind publish_store (a whole store) and
-# upsert_dim (each touched bucket): stage, swap in, recover.
+# The rename protocol behind upsert_dim (each touched bucket):
+# stage, swap in, recover.
 
 def _write_stage(writer, fs, P, stage: str) -> None:
     """Write ``writer``'s frame to ``stage`` and insist on the
@@ -361,15 +297,15 @@ def _write_stage(writer, fs, P, stage: str) -> None:
 
 
 def _swap_in(fs, stage, live, prev) -> None:
-    """Publish the directory ``stage`` at ``live`` (remove ``live``
-    when ``stage`` is None): rename the live dir aside to ``prev``,
-    rename the stage in, delete ``prev``. A crash between any two
-    steps leaves a state :func:`_recover_swap` completes or undoes."""
+    """Publish the directory ``stage`` at ``live``: rename the live
+    dir aside to ``prev``, rename the stage in, delete ``prev``. A
+    crash between any two steps leaves a state :func:`_recover_swap`
+    completes or undoes."""
     # FileSystem.rename reports failure by RETURNING false, not by
     # raising — an unchecked call would silently skip the publish
     if fs.exists(live) and not fs.rename(live, prev):
         raise RuntimeError(f"could not set aside {live}")
-    if stage is not None and not fs.rename(stage, live):
+    if not fs.rename(stage, live):
         raise RuntimeError(f"could not publish {stage} into {live}")
     fs.delete(prev, True)
 
@@ -469,126 +405,3 @@ def compact_table(spark, path: str,
     return {"files_before": before,
             "files_after": count_files(path),
             "rows": rows_total}
-
-
-def optimize_layout(df: DataFrame, path: str, range_cols: list[str],
-                    n_partitions: int = 32) -> dict:
-    """Range-partitioned, sorted data layout — the third layout tool
-    next to hive partitioning (partition pruning) and bucketing
-    (shuffle-free joins): `repartitionByRange` on the query's range
-    key + `sortWithinPartitions` writes files whose per-file (and
-    per-row-group) min/max statistics are TIGHT and essentially
-    disjoint, which is what turns a range predicate into physical
-    row-group skipping at scan time on a 100 TB table. Spark samples
-    the key distribution for the range bounds, so skewed keys still
-    split evenly.
-
-    Returns {files, disjoint_pct}: the written file count and the
-    percentage of adjacent file-pairs (by min) whose key ranges do
-    not overlap — 100 means a scan with a range predicate reads only
-    the files it must; the number is also the test's assertion
-    surface. Metadata is read back footer-side (pyarrow), no data
-    scan."""
-    (df.repartitionByRange(n_partitions, *range_cols)
-       .sortWithinPartitions(*range_cols)
-       .write.mode("overwrite").parquet(path))
-
-    spans = _file_spans(path, range_cols[0])
-    disjoint = sum(1 for i in range(1, len(spans))
-                   if spans[i][0] >= spans[i - 1][1])
-    pct = 100 * disjoint // max(len(spans) - 1, 1)
-    return {"files": len(spans), "disjoint_pct": pct}
-
-
-def _file_spans(path: str, key: str) -> list[tuple]:
-    """Footer-side per-file (min, max) spans for one column."""
-    import pyarrow.parquet as pq
-
-    spans = []
-    for fn in os.listdir(path):
-        if not fn.endswith(".parquet") or fn.startswith("."):
-            continue
-        md = pq.read_metadata(os.path.join(path, fn))
-        lo = hi = None
-        for rg in range(md.num_row_groups):
-            for ci in range(md.row_group(rg).num_columns):
-                col = md.row_group(rg).column(ci)
-                if col.path_in_schema == key and col.statistics:
-                    s = col.statistics
-                    lo = s.min if lo is None else min(lo, s.min)
-                    hi = s.max if hi is None else max(hi, s.max)
-        if lo is not None:
-            spans.append((lo, hi))
-    return sorted(spans)
-
-
-def zorder_layout(df: DataFrame, path: str, col_a: str, col_b: str,
-                  bits: int = 8, n_partitions: int = 32) -> dict:
-    """Z-order (Morton-curve) data layout — the two-dimensional
-    complement of optimize_layout's single-key range sort (the Delta
-    `OPTIMIZE ZORDER BY` shape): both columns are min-max bucketized
-    to ``bits`` bits (one tiny bounds aggregation), their bits are
-    interleaved into one integer z-key (pure JVM shift/mask
-    arithmetic — no UDF), and the frame is range-partitioned and
-    sorted by that key. Each written file then covers a bounded
-    RECTANGLE in (a, b) space, so min/max row-group statistics prune
-    scans filtered on EITHER column — a single-key sort gives tight
-    spans on its key but each file spans ~the full range of the other
-    column. Skipping effectiveness is audited footer-side per
-    dimension: avg per-file span as a permille of the global span
-    (lower = better pruning; the test asserts z-order beats the
-    single-key layout on the second dimension by a wide margin while
-    staying bounded on the first).
-
-    At 100 TB this is the layout tool for the two-predicate scan
-    pattern (time x entity): files are rewritten once, every later
-    scan with a predicate on either dimension reads a sub-linear
-    file subset."""
-    bounds = df.agg(
-        F.min(col_a).alias("a_lo"), F.max(col_a).alias("a_hi"),
-        F.min(col_b).alias("b_lo"), F.max(col_b).alias("b_hi")).collect()[0]
-    if bounds.a_lo is None or bounds.b_lo is None:
-        # min() is NULL only when the column has no non-null values —
-        # an empty (or not-yet-populated) input; fail loud rather
-        # than TypeError inside the bucket arithmetic
-        raise ValueError(
-            f"zorder_layout: no non-null values in {col_a}/{col_b} "
-            "(empty input?); nothing to lay out")
-    n = (1 << bits) - 1
-
-    def bucket(col: str, lo, hi) -> F.Column:
-        # exact integer DIV — the same expression zorder_stats'
-        # oracle checks; a float divide here can round differently
-        # at bucket boundaries and fork the layout key from the
-        # graded bucket formula
-        rng = max(int(hi) - int(lo), 1)
-        # backticks: a non-identifier column name (`a-b`) must stay a
-        # column reference, not parse as an expression
-        return F.expr(
-            f"((CAST(`{col}` AS BIGINT) - {int(lo)}) * {n}) DIV {rng}")
-
-    ba, bb = bucket(col_a, bounds.a_lo, bounds.a_hi), \
-        bucket(col_b, bounds.b_lo, bounds.b_hi)
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        z = (z
-             + F.shiftleft(F.shiftright(ba, i).bitwiseAND(F.lit(1)),
-                           2 * i)
-             + F.shiftleft(F.shiftright(bb, i).bitwiseAND(F.lit(1)),
-                           2 * i + 1))
-    (df.withColumn("_z", z)
-       .repartitionByRange(n_partitions, "_z")
-       .sortWithinPartitions("_z")
-       .drop("_z")
-       .write.mode("overwrite").parquet(path))
-
-    out = {}
-    for dim, col, lo, hi in (("a", col_a, bounds.a_lo, bounds.a_hi),
-                             ("b", col_b, bounds.b_lo, bounds.b_hi)):
-        spans = _file_spans(path, col)  # one footer pass per dim
-        out.setdefault("files", len(spans))
-        width = max(int(hi) - int(lo), 1)
-        avg = (sum(int(s[1]) - int(s[0]) for s in spans)
-               // max(len(spans), 1))
-        out[f"avg_span_permille_{dim}"] = 1000 * avg // width
-    return out

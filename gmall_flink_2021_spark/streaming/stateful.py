@@ -34,8 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType, LongType, StringType, StructField, StructType)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 JUMP_TIMEOUT_MS = 10_000  # UserJumpDetailApp.java:92-94 (within 10 s)
 
@@ -46,8 +45,8 @@ def _day(ts_ms: int) -> str:
 
 
 def _interval_us(interval: str) -> int:
-    """Parse a withWatermark-style interval ("90 minutes") to micros —
-    shared by every idle-TTL knob so the accepted syntax stays one."""
+    """Parse a withWatermark-style interval ("90 minutes") to micros
+    (``repair_is_new``'s idle TTL)."""
     import re as _re
     m = _re.fullmatch(
         r"\s*(\d+)\s*(second|minute|hour|day)s?\s*", interval)
@@ -141,8 +140,7 @@ def repair_is_new(events: DataFrame,
     whose last sighting is older than the TTL (by the event-time
     watermark, out-of-orderness bound ``delay``) is dropped from
     state, trading exactly one wrongly-honored is_new=1 claim on the
-    mid's revival for O(active mids) state — the same escape hatch as
-    `event_transitions_stream`'s idle_ttl.
+    mid's revival for O(active mids) state.
 
     Two TTL-mode caveats the no-TTL form does not have: (a) the
     watermark also enforces O10 late-data semantics — rows arriving
@@ -275,142 +273,3 @@ def page_events_projection(page: DataFrame) -> DataFrame:
         F.col("page.page_id").alias("page_id"),
         F.timestamp_millis(F.col("ts")).alias("et"),
     )
-
-
-# ------------------------------------------- Markov transition stream
-# Streaming form of operators/analytics.event_transitions with
-# WATERMARK-BUFFERED per-user ordering: arrivals are held in per-key
-# state until the event-time watermark passes them, then emitted in
-# (ts, event_id) order — so out-of-order delivery across micro-batches
-# (a real Kafka fan-in) produces exactly the batch matrix, not
-# whichever transitions the arrival order happened to suggest.
-# Buffered tails flush via EventTimeTimeout as the watermark advances;
-# like every watermarked operator, a bounded replay's final rows sit
-# behind the last watermark until a later event (heartbeat/sentinel)
-# moves it — standard Structured Streaming practice, exercised by the
-# tests. Rows arriving later than the watermark (ts already emitted
-# past) are dropped — O10 late-data semantics, same as the engine's
-# windowed aggregations.
-TRANSITION_IN = StructType([
-    StructField("user_id", LongType()), StructField("ts_us", LongType()),
-    StructField("event_id", LongType()),
-    StructField("event_type", StringType()),
-])
-TRANSITION_OUT = StructType([
-    StructField("user_id", LongType()),
-    StructField("prev_type", StringType()),
-    StructField("next_type", StringType()),
-])
-_TRANSITION_STATE = StructType([
-    StructField("last_type", StringType()),
-    StructField("last_ts_us", LongType()),
-    StructField("last_eid", LongType()),
-    StructField("buf_ts", ArrayType(LongType())),
-    StructField("buf_eid", ArrayType(LongType())),
-    StructField("buf_type", ArrayType(StringType())),
-])
-
-
-def _make_transitions_fn(idle_ttl_us: int | None):
-    def _transitions_fn(key, pdfs: Iterator[pd.DataFrame],
-                        state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            last_type, last_ts, last_eid, bts, beid, btyp = state.get
-            buf = list(zip(bts, beid, btyp))
-        else:
-            last_type, last_ts, last_eid, buf = None, -1, -1, []
-        for pdf in pdfs:
-            for r in pdf.itertuples(index=False):
-                buf.append((int(r.ts_us), int(r.event_id),
-                            r.event_type))
-        # emit strictly BELOW the watermark: a future arrival is
-        # guaranteed ts >= wm, so nothing can ever sort before an
-        # emitted row (ties broken by event_id, guarded via last_eid)
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        buf.sort()
-        out, keep = [], []
-        for ts, eid, typ in buf:
-            if ts >= wm_us:
-                keep.append((ts, eid, typ))
-            elif ts < last_ts or (ts == last_ts and eid <= last_eid):
-                continue       # late beyond the emitted frontier: drop
-            else:
-                if last_type is not None:
-                    out.append((key[0], last_type, typ))
-                last_type, last_ts, last_eid = typ, ts, eid
-        if (not keep and idle_ttl_us is not None and last_ts >= 0
-                and wm_us >= last_ts + idle_ttl_us):
-            # idle TTL: the key's buffer is drained and its frontier
-            # has seen no event for idle_ttl — drop the state row
-            # entirely (a revival loses exactly its first transition)
-            state.remove()
-            yield pd.DataFrame(out, columns=["user_id", "prev_type",
-                                             "next_type"])
-            return
-        state.update((last_type, last_ts, last_eid,
-                      [k[0] for k in keep], [k[1] for k in keep],
-                      [k[2] for k in keep]))
-        if keep:
-            # fire as soon as the watermark passes the OLDEST buffered
-            # row (keep is sorted): each firing flushes whatever became
-            # final and re-arms at the new oldest — a key whose old
-            # transitions are already finalized by the global watermark
-            # emits them promptly instead of waiting for its own newest
-            # event to age out (or for new per-key data). Timeout
-            # triggers when wm_ms > t_ms, and wm_ms > ts_us//1000
-            # implies wm_us > ts_us; +1 because Spark requires the
-            # timeout to sit strictly beyond the current watermark (a
-            # buffered row can share the watermark's exact ms).
-            state.setTimeoutTimestamp(keep[0][0] // 1000 + 1)
-        elif idle_ttl_us is not None and last_ts >= 0:
-            # re-arm so the removal above actually fires on a later
-            # (possibly no-data) batch once the watermark ages past
-            # the frontier by the TTL
-            state.setTimeoutTimestamp((last_ts + idle_ttl_us) // 1000
-                                      + 1)
-        yield pd.DataFrame(out, columns=["user_id", "prev_type",
-                                         "next_type"])
-
-    return _transitions_fn
-
-
-# default (no-TTL) form, kept importable for tests/documentation
-_transitions_fn = _make_transitions_fn(None)
-
-
-def event_transitions_stream(events: DataFrame,
-                             delay: str = "0 seconds",
-                             idle_ttl: str | None = None) -> DataFrame:
-    """events: (user_id, ts_us micros, event_id, event_type) — emits
-    one row per completed (prev → next) transition in event-time
-    order regardless of arrival order; aggregate downstream for the
-    matrix (counts are associative, so per-batch appends sum to
-    exactly the batch operator's `transitions`).
-
-    ``delay`` is the out-of-orderness bound (withWatermark syntax);
-    the default 0 trusts the source's max-seen ts, i.e. buffers only
-    across micro-batch boundaries.
-
-    Scale shape: state per key is one (type, ts, eid) frontier plus
-    the watermark-lag buffer — the BUFFER is bounded by delay ×
-    per-user event rate, not history (asserted under adversarial
-    hot-key skew in tests/test_streaming.py), but the FRONTIER row
-    itself lives for the life of the query by default: exact batch
-    parity requires remembering each key's last emitted event, so
-    total state grows with distinct-key cardinality. On an unbounded
-    real keyspace pass ``idle_ttl`` (event-time interval, e.g.
-    "30 days"): a key whose frontier has seen no event for that long
-    is dropped entirely, trading exactly ONE lost transition on the
-    key's revival for O(active keys) state.
-    """
-    ttl_us = None if idle_ttl is None else _interval_us(idle_ttl)
-    # undated events out of domain, mirroring the batch operator's
-    # dated() gate (operators/analytics.event_transitions)
-    wm = (events
-          .filter(F.col("ts_us").isNotNull())
-          .withColumn("et", F.timestamp_micros(F.col("ts_us")))
-          .withWatermark("et", delay))
-    return (wm.groupBy("user_id").applyInPandasWithState(
-        _make_transitions_fn(ttl_us), TRANSITION_OUT,
-        _TRANSITION_STATE, "append",
-        GroupStateTimeout.EventTimeTimeout))

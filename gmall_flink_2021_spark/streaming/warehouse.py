@@ -142,17 +142,20 @@ class Warehouse:
 
         def sink(batch: DataFrame, bid: int) -> None:
             batch = batch.persist()
-            sinks.write_idempotent(
-                dwd.dirty_records(batch), bid, self._p("dwd", "dirty"))
-            streams = dwd.split_log(batch)
-            for name in ("start", "page"):
-                sinks.write_idempotent(streams[name], bid,
-                                       self._p("dwd", f"log_{name}"))
-            sinks.write_idempotent(
-                streams["display"].withColumn(
-                    "common", F.col("common").cast("string")),
-                bid, self._p("dwd", "log_display"))
-            batch.unpersist()
+            try:
+                sinks.write_idempotent(
+                    dwd.dirty_records(batch), bid,
+                    self._p("dwd", "dirty"))
+                streams = dwd.split_log(batch)
+                for name in ("start", "page"):
+                    sinks.write_idempotent(streams[name], bid,
+                                           self._p("dwd", f"log_{name}"))
+                sinks.write_idempotent(
+                    streams["display"].withColumn(
+                        "common", F.col("common").cast("string")),
+                    bid, self._p("dwd", "log_display"))
+            finally:
+                batch.unpersist()
 
         sinks.drain(parsed, sink, self._p("ck", "base_log"))
 

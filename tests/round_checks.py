@@ -8,9 +8,9 @@ Stages (subset-selectable; --all runs every one):
   headliners   warm 3-rep medians of the pinned headliner set
   adversarial  edge+empty corpus full-registry oracle sweeps
   fuzz         the committed ROUND_SEEDS full-registry oracle sweeps
-  soak         short crash-injection streaming soak (5 stream jobs,
-               exactly-once checks per cycle — the 30-min MB-state
-               form is run standalone, SCALE.md round 10)
+  soak         short crash-injection streaming soak (the interval
+               join and gmall_dwm.payment_wide_join under SIGKILL,
+               exactly-once checks per cycle)
   x10          full-registry x10 wall sweep (vs bench baselines)
   x32          full-registry x32 wall sweep
 
@@ -154,7 +154,7 @@ def stage_soak(res):
     p, wall = _run([sys.executable,
                     os.path.join(TESTS, "soak_streaming.py"),
                     "--minutes", "5", "--kill-p", "0.4",
-                    "--docs", "2000", "--events", "800",
+                    "--events", "800",
                     "--root", "/tmp/gmall_soak_rc"])
     m = re.search(r"SOAK PASS: (\d+) cycles, (\d+) SIGKILLs", p.stdout)
     res["soak"] = {

@@ -18,9 +18,8 @@ import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from test_streaming_fuzz import (  # noqa: E402
+from tests.test_streaming_fuzz import (  # noqa: E402
     test_fuzz_interval_join_streaming_matches_batch,
     test_fuzz_stateful_trio_streaming_matches_batch)
 

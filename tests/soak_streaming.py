@@ -1,25 +1,23 @@
-"""Streaming soak with crash injection (VERDICT r8 #8).
+"""Streaming soak with crash injection.
 
-Drives the three flagship incremental jobs — the UV sketch store,
-the column-profile store, and the incremental MinHash dedup marks —
-as a long-running ingest loop: every cycle appends a fresh seeded
-micro-corpus to the source directories, runs one availableNow pass
-of all three jobs IN A SUBPROCESS, and with probability --kill-p
-SIGKILLs that subprocess at a random moment mid-pass before
-restarting it. After each cycle the harness asserts exactly-once
-convergence against batch recomputation over EVERYTHING ingested so
-far, and records state-store sizes over time.
+Drives two watermarked stream-stream joins — a click→purchase
+interval join (purchase within 15 minutes of the click, same user)
+and the real J2 operator ``gmall_dwm.payment_wide_join`` — as a
+long-running ingest loop: every cycle appends a fresh seeded events
+slice to the source directory, runs one availableNow pass of both
+queries IN A SUBPROCESS, and with probability --kill-p SIGKILLs that
+subprocess at a random moment mid-pass before restarting it. After
+each cycle the harness asserts exactly-once convergence against batch
+recomputation over EVERYTHING ingested so far, and records state
+sizes over time.
 
-What exactly-once means per job (all pinned by unit tests; the soak
-proves them under sustained growth + real SIGKILL):
- - uv/profile stores: merged_bid embedded + atomic rename publish —
-   a replayed batch id is a no-op; counters match batch EXACTLY.
- - dedup marks/state: overwrite-by-batchId idempotent writes; marks
-   match operators/dedup.minhash_dedup_marks over the full corpus.
+Both queries write through Spark's file sink, whose _spark_metadata
+log makes a replayed batch a no-op, so the streamed pairs must equal
+the batch join's pairs exactly after any SIGKILL.
 
 Usage:
   python tests/soak_streaming.py [--minutes 10] [--kill-p 0.4]
-      [--seed 90400] [--root /tmp/gmall_soak]
+      [--seed 90400] [--events 120] [--root /tmp/gmall_soak]
   python tests/soak_streaming.py --worker <root>     (internal)
 
 Emits <root>/timeline.json and prints a SCALE.md-ready table.
@@ -40,91 +38,22 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-PROFILE_COLS = ["lang", "source", "n_chars"]
-
 
 def _paths(root):
     return {k: os.path.join(root, k) for k in
-            ("src_docs", "src_events", "uv_store", "prof_store",
-             "dedup_out", "dedup_state", "ck_uv", "ck_prof",
-             "ck_dedup", "out_trans", "ck_trans", "out_join",
-             "ck_join", "out_pay", "ck_pay")}
+            ("src_events", "out_join", "ck_join", "out_pay", "ck_pay")}
 
 
 # ------------------------------------------------------------ worker
 def worker(root: str) -> None:
+    from pyspark.sql import functions as F
+
     from gmall_flink_2021_spark.session import get_spark
-    from gmall_flink_2021_spark.streaming.jobs import (
-        minhash_dedup_stream, profile_sketch_stream, uv_sketch_stream)
 
     p = _paths(root)
     spark = get_spark("soak-worker")
     spark.sparkContext.setLogLevel("ERROR")
-    docs_schema = spark.read.parquet(p["src_docs"]).schema
     ev_schema = spark.read.parquet(p["src_events"]).schema
-
-    # Watermark heartbeat (sentinel user -1, ts = max seen + 60 s),
-    # appended BEFORE any job of this pass so EVERY event consumer —
-    # the uv store included — sees it within the same pass as the
-    # cycle's data (verify recomputes batch counts over the same
-    # files, heartbeats included): the transitions stream's buffered
-    # tails only flush when the watermark passes them, and the
-    # heartbeat guarantees that flush happens INSIDE a completed
-    # worker pass — so whenever the driver sees rc==0, the streamed
-    # output is fully drained for everything fed so far (a SIGKILL
-    # between the data batch and the timeout batch just means the
-    # NEXT attempt appends a fresh heartbeat and drains).
-    import datetime as _dt
-
-    from pyspark.sql import functions as F
-
-    from adversarial_corpus import _evt_schema, _write
-    mx = spark.read.parquet(p["src_events"]).agg(
-        F.max("ts")).collect()[0][0]
-    if mx is None:                        # all-NULL ts corpus
-        mx = _dt.datetime(2024, 1, 1)
-    n_hb = len([f for f in os.listdir(p["src_events"])
-                if f.startswith("hb_")])
-    # write-then-rename (ADVICE r10): the killer thread may SIGKILL
-    # this worker mid-write, and a torn parquet INSIDE the source dir
-    # would poison every later spark.read of src_events; rename on
-    # the same filesystem is atomic, so readers only ever see a
-    # complete file
-    hb_tmp = os.path.join(root, f".hb_{n_hb:05d}.parquet.tmp")
-    _write(hb_tmp, _evt_schema(),
-           [(9_000_000_000 + n_hb, mx + _dt.timedelta(seconds=60),
-             -1, "view", 0.0, None)])
-    os.rename(hb_tmp,
-              os.path.join(p["src_events"], f"hb_{n_hb:05d}.parquet"))
-
-    uv_sketch_stream(
-        spark.readStream.schema(ev_schema).parquet(p["src_events"]),
-        p["uv_store"], p["ck_uv"])
-    profile_sketch_stream(
-        spark.readStream.schema(docs_schema).parquet(p["src_docs"]),
-        PROFILE_COLS, p["prof_store"], p["ck_prof"])
-    minhash_dedup_stream(
-        spark.readStream.schema(docs_schema).parquet(p["src_docs"]),
-        p["dedup_out"], p["dedup_state"], p["ck_dedup"])
-
-    # ---- round-10 additions (VERDICT r9 #4): the stateful
-    # transitions stream and a watermarked stream-stream interval
-    # join, both through Spark's exactly-once file sink.
-    from gmall_flink_2021_spark.streaming.stateful import (
-        event_transitions_stream)
-
-    proj = (spark.readStream.schema(ev_schema)
-            .parquet(p["src_events"])
-            .filter(F.col("ts").isNotNull())
-            .select("user_id",
-                    F.unix_micros(F.col("ts").cast("timestamp"))
-                    .alias("ts_us"),
-                    "event_id", "event_type"))
-    q = (event_transitions_stream(proj).writeStream
-         .format("parquet").option("path", p["out_trans"])
-         .option("checkpointLocation", p["ck_trans"])
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
 
     def leg(name):
         return (spark.readStream.schema(ev_schema)
@@ -161,7 +90,6 @@ def worker(root: str) -> None:
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination()
 
-    # ---- round-11 addition (VERDICT r10 #4): soaked stream #6 is
     # the REAL J2 operator (gmall_dwm.payment_wide_join, payment
     # within [order, order+15 min], PaymentWideApp.java:80-88) —
     # purchase events play orders, view events play payments, keyed
@@ -193,8 +121,7 @@ def _payment_join_legs(events):
         return events.filter((F.col("event_type") == name)
                              & F.col("ts").isNotNull()
                              & F.col("user_id").isNotNull()
-                             & F.col("event_id").isNotNull()
-                             & (F.col("user_id") != -1))
+                             & F.col("event_id").isNotNull())
 
     pay = leg("view").select(
         F.col("event_id").alias("id"),
@@ -215,32 +142,23 @@ def _payment_join_legs(events):
 
 
 # ------------------------------------------------------------ feeder
-def feed(root: str, cycle: int, seed: int, n_docs: int = 40,
-         n_events: int = 120) -> None:
-    """Append one seeded micro-corpus: doc_ids strictly increase with
-    the cycle (the dedup stream's arrival-order contract — DWD gates
-    identity upstream, so only non-NULL ids are fed). Event
-    timestamps shift forward 7 days per cycle (the generator spreads
-    a cycle over 5 days), so event time is monotone ACROSS cycles —
-    the transitions stream's watermark and the interval join's state
-    eviction see an advancing clock, exactly like a live pipeline;
-    nothing arrives behind the watermark."""
+def feed(root: str, cycle: int, seed: int, n_events: int = 120) -> None:
+    """Append one seeded events slice. Event timestamps shift forward
+    7 days per cycle (the generator spreads a cycle over 5 days), so
+    event time is monotone ACROSS cycles — the joins' watermarks and
+    state eviction see an advancing clock, exactly like a live
+    pipeline; nothing arrives behind the watermark."""
     import datetime
 
-    from fuzz_corpus import _documents_rows, _events_rows
-    from adversarial_corpus import _doc_schema, _evt_schema, _write
+    from adversarial_corpus import _evt_schema, _write
+    from fuzz_corpus import _events_rows
 
     rng = random.Random(seed * 1000 + cycle)
     shift = datetime.timedelta(days=7 * cycle)
-    docs = [(cycle * 1000000 + i, t, lg, src, n)
-            for i, (d, t, lg, src, n) in
-            enumerate(_documents_rows(rng, n_docs))]
     evs = [(cycle * 1000000 + i,
             None if ts is None else ts + shift, u, et, v, pr)
            for i, (e, ts, u, et, v, pr) in
            enumerate(_events_rows(rng, n_events))]
-    _write(os.path.join(root, "src_docs", f"c{cycle:04d}.parquet"),
-           _doc_schema(), docs)
     _write(os.path.join(root, "src_events", f"c{cycle:04d}.parquet"),
            _evt_schema(), evs)
 
@@ -256,10 +174,6 @@ def du(path):
 def state_sizes(root: str) -> dict:
     p = _paths(root)
     return {
-        "uv_store_bytes": du(p["uv_store"]),
-        "prof_store_bytes": du(p["prof_store"]),
-        "dedup_state_bytes": du(p["dedup_state"]),
-        "trans_state_bytes": du(p["ck_trans"]),
         "join_state_bytes": du(p["ck_join"]),
         "pay_state_bytes": du(p["ck_pay"]),
     }
@@ -269,72 +183,9 @@ def state_sizes(root: str) -> dict:
 def verify(spark, root: str) -> dict:
     import pyspark.sql.functions as F
 
-    from gmall_flink_2021_spark.operators.dedup import \
-        minhash_dedup_marks
-    from gmall_flink_2021_spark.streaming import sinks
-
     p = _paths(root)
-    docs = spark.read.parquet(p["src_docs"])
     events = spark.read.parquet(p["src_events"])
     problems = []
-
-    sinks.recover_store(p["uv_store"])
-    uv = spark.read.parquet(p["uv_store"])
-    # NULL-day group included: uv_daily_sketches counts undated
-    # events' page views under the NULL day
-    want_pv = {str(r.day): r.pv for r in
-               events.groupBy(F.date_trunc("DAY", "ts").alias("day"))
-               .agg(F.count(F.lit(1)).alias("pv")).collect()}
-    got_pv = {str(r.day): r.pv_ct for r in uv.collect()}
-    if want_pv != got_pv:
-        problems.append(f"uv pv_ct mismatch: {len(want_pv)} batch "
-                        f"days vs {len(got_pv)} store days")
-
-    sinks.recover_store(p["prof_store"])
-    prof = {r.col_name: (r.ct, r.null_ct) for r in
-            spark.read.parquet(p["prof_store"]).collect()}
-    n = docs.count()
-    for c in PROFILE_COLS:
-        nn = docs.filter(F.col(c).isNull()).count()
-        if prof.get(c, (None, None))[:2] != (n, nn):
-            problems.append(
-                f"profile {c}: store {prof.get(c)} != batch {(n, nn)}")
-
-    got = {r.doc_id: (r.is_dup, r.earliest_prior) for r in
-           spark.read.parquet(p["dedup_out"]).collect()}
-    marks_df, mh = minhash_dedup_marks(
-        docs.filter(F.col("doc_id").isNotNull()))
-    want = {r.doc_id: (r.is_dup, r.earliest_prior)
-            for r in marks_df.collect()}
-    mh.unpersist()
-    if got != want:
-        diff = [k for k in want if got.get(k) != want[k]][:5]
-        n_bad = len([k for k in want if got.get(k) != want[k]])
-        problems.append(
-            f"dedup marks diverge on {n_bad} docs, e.g. {diff}")
-
-    # ---- transitions stream vs the batch operator (sentinel user
-    # -1 heartbeats excluded on both sides; every completed worker
-    # pass ends with a heartbeat-advanced watermark, so the streamed
-    # output is fully drained — see worker()).
-    from gmall_flink_2021_spark.operators.analytics import \
-        event_transitions
-
-    real = events.filter(F.col("user_id").isNull()
-                         | (F.col("user_id") != -1))
-    want_tr = {(r.prev_type, r.next_type, r.transitions) for r in
-               event_transitions(real).collect()}
-    got_tr = {(r.prev_type, r.next_type, r.cnt) for r in
-              spark.read.parquet(p["out_trans"])
-              .filter(F.col("user_id").isNull()
-                      | (F.col("user_id") != -1))
-              .groupBy("prev_type", "next_type")
-              .agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    if want_tr != got_tr:
-        problems.append(
-            f"transitions diverge: {len(want_tr)} batch cells vs "
-            f"{len(got_tr)} streamed, e.g. "
-            f"{sorted(want_tr ^ got_tr)[:4]}")
 
     # ---- interval join stream vs the batch join (J1/J2 shape)
     def legb(name):
@@ -363,8 +214,8 @@ def verify(spark, root: str) -> dict:
             f"interval join diverges: {len(want_j)} batch pairs vs "
             f"{len(got_j)} streamed")
 
-    # ---- soaked stream #6: the real J2 operator, streamed vs the
-    # same operator run in batch over everything ingested so far
+    # ---- the real J2 operator, streamed vs the same operator run
+    # in batch over everything ingested so far
     from gmall_flink_2021_spark.operators import gmall_dwm
 
     pay_b, ow_b = _payment_join_legs(events)
@@ -381,10 +232,8 @@ def verify(spark, root: str) -> dict:
 
     return {
         "problems": problems,
-        "docs": n, "events": events.count(),
+        "events": events.count(),
         **state_sizes(root),
-        "dedup_out_rows": len(got),
-        "trans_rows": got_tr and sum(c for *_, c in got_tr) or 0,
         "join_rows": len(got_j),
         "pay_rows": len(got_p),
     }
@@ -405,8 +254,8 @@ def main() -> None:
     kill_p = opt("--kill-p", 0.4)
     seed = opt("--seed", 90400, int)
     root = opt("--root", "/tmp/gmall_soak", str)
-    n_docs = opt("--docs", 40, int)       # per-cycle slice sizes —
-    n_events = opt("--events", 120, int)  # crank for MB-scale state
+    n_events = opt("--events", 120, int)  # per-cycle slice size —
+    # crank for MB-scale state
     # verify every Nth cycle (default every cycle). At 100+ MB state
     # the batch recomputation over EVERYTHING ingested dominates the
     # wall, so the big-state runs sample the exactly-once check; the
@@ -425,14 +274,10 @@ def main() -> None:
     p = _paths(root)
     if not resume:
         shutil.rmtree(root, ignore_errors=True)
-    # only the SOURCE dirs may pre-exist on a fresh start: the jobs
-    # key their cold-start behavior on their state/store paths not
-    # existing yet (an empty state dir reads as a corrupt store)
-    os.makedirs(p["src_docs"], exist_ok=True)
     os.makedirs(p["src_events"], exist_ok=True)
     start_cycle = 0
     if resume:
-        start_cycle = len([f for f in os.listdir(p["src_docs"])
+        start_cycle = len([f for f in os.listdir(p["src_events"])
                            if f.startswith("c")])
 
     from gmall_flink_2021_spark.session import get_spark
@@ -449,7 +294,7 @@ def main() -> None:
         except OSError:
             pass
     while time.time() < deadline:
-        feed(root, cycle, seed, n_docs, n_events)
+        feed(root, cycle, seed, n_events)
         attempts, walls, killed = 0, [], []
         while True:
             attempts += 1
@@ -514,13 +359,10 @@ def _report(row, kills, recovery):
         if row.get("verified", True) else "--"
     rec = f" recovery={row['recovery_wall']}s" \
         if row.get("recovery_wall") else ""
-    docs = row.get("docs", -1)
     events = row.get("events", -1)
-    print(f"cycle {row['cycle']:3d} [{status}] docs={docs:6d} "
+    print(f"cycle {row['cycle']:3d} [{status}] "
           f"events={events:6d} kills={kills} "
-          f"state(dedup/uv/prof/trans/join/pay)="
-          f"{row['dedup_state_bytes']}/{row['uv_store_bytes']}/"
-          f"{row['prof_store_bytes']}/{row['trans_state_bytes']}/"
+          f"state(join/pay)="
           f"{row['join_state_bytes']}/{row['pay_state_bytes']} B{rec}",
           flush=True)
 

@@ -73,78 +73,3 @@ def test_aqe_skew_join_splits_the_hot_partition(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_optimize_layout_produces_disjoint_range_files(spark, tmp_path):
-    """Range-partitioned sorted layout: per-file min/max key spans
-    must be (near-)disjoint — the precondition for physical row-group
-    skipping under a range predicate — where the naive unsorted write
-    of the same data leaves every file spanning the whole key range."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from gmall_flink_2021_spark.sources.tables import load_table
-    from gmall_flink_2021_spark.streaming.sinks import optimize_layout
-
-    events = load_table(spark, "/root/testdata/sf0.001", "events") \
-        .select("event_id", "user_id", "ts", "value")
-
-    opt = str(tmp_path / "events_ranged")
-    stats = optimize_layout(events, opt, ["ts"], n_partitions=8)
-    assert stats["files"] >= 4
-    assert stats["disjoint_pct"] >= 90, stats
-
-    # contrast: the naive layout (hash-ish round-robin from a plain
-    # repartition) has massively overlapping spans
-    naive = str(tmp_path / "events_naive")
-    events.repartition(8).write.parquet(naive)
-    spans = []
-    for fn in os.listdir(naive):
-        if fn.endswith(".parquet") and not fn.startswith("."):
-            md = pq.read_metadata(os.path.join(naive, fn))
-            s = md.row_group(0).column(2).statistics
-            lo, hi = s.min, s.max
-            for rg in range(md.num_row_groups):
-                for ci in range(md.row_group(rg).num_columns):
-                    col = md.row_group(rg).column(ci)
-                    if col.path_in_schema == "ts" and col.statistics:
-                        lo = min(lo, col.statistics.min)
-                        hi = max(hi, col.statistics.max)
-            spans.append((lo, hi))
-    spans.sort()
-    naive_disjoint = sum(1 for i in range(1, len(spans))
-                         if spans[i][0] >= spans[i - 1][1])
-    assert naive_disjoint < len(spans) - 1  # overlapping, as expected
-
-    # content integrity: the re-laid-out table is the same multiset
-    assert spark.read.parquet(opt).count() == events.count()
-
-
-def test_zorder_layout_bounds_both_dimensions(spark, tmp_path):
-    """Z-order vs single-key range sort on (user_id, event_id): the
-    range layout gives tight spans on its sort key but each file
-    spans ~the whole range of the other column; the z-ordered layout
-    must bound BOTH dimensions — its second-dimension per-file span
-    must be a small fraction of the single-key layout's."""
-    from gmall_flink_2021_spark.sources.tables import load_table
-    from gmall_flink_2021_spark.streaming import sinks
-
-    events = load_table(spark, SF_SMOKE, "events") \
-        .select("user_id", "event_id")
-
-    zpath = str(tmp_path / "z")
-    zstats = sinks.zorder_layout(events, zpath, "user_id", "event_id",
-                                 n_partitions=16)
-    rpath = str(tmp_path / "r")
-    sinks.optimize_layout(events, rpath, ["user_id"], n_partitions=16)
-    rspans = sinks._file_spans(rpath, "event_id")
-    lo = min(s[0] for s in rspans)
-    hi = max(s[1] for s in rspans)
-    r_avg_permille = 1000 * (sum(int(s[1]) - int(s[0]) for s in rspans)
-                             // len(rspans)) // max(int(hi) - int(lo), 1)
-    # single-key layout leaves the second dim essentially unpruned
-    assert r_avg_permille >= 800, r_avg_permille
-    # z-order bounds both dims to a fraction of their global range
-    assert zstats["avg_span_permille_b"] <= r_avg_permille // 2, zstats
-    assert zstats["avg_span_permille_a"] <= 500, zstats

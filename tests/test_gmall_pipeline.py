@@ -220,8 +220,8 @@ def test_training_release_composition(spark, tmp_path):
     # round 4: the model-based filter composes onto the release —
     # classifier scores join the survivor set 1:1 on doc_id, the kept
     # subset is exactly the keep_label=1 survivors, and re-scoring
-    # the written release reproduces the stored labels (the
-    # score-at-arrival contract of classifier_scores_stream)
+    # the written release reproduces the stored labels (per-doc
+    # scores depend only on the doc and the weights)
     scores = textstats.hashed_classifier_scores(surv)
     scored_release = surv.join(
         scores.select("doc_id", "keep_label"), "doc_id")

@@ -1,8 +1,8 @@
 """Hygiene invariant: the package starts streaming queries in exactly
-two places — ``sinks.drain`` (every foreachBatch job) and
-``jobs.run_to_completion`` (the memory sink the tests read back).
-This test scans the package source so copies of the writeStream
-boilerplate cannot creep back in.
+one place — ``sinks.drain``, which runs every foreachBatch job. (The
+memory-sink runner the tests read back, ``run_to_completion``, lives
+in ``tests/stream_helpers.py``.) This test scans the package source
+so copies of the writeStream boilerplate cannot creep back in.
 """
 
 from __future__ import annotations
@@ -12,8 +12,7 @@ import os
 
 import gmall_flink_2021_spark as pkg
 
-_ALLOWED = {"streaming/sinks.py:drain",
-            "streaming/jobs.py:run_to_completion"}
+_ALLOWED = {"streaming/sinks.py:drain"}
 
 
 def _writestream_sites(root: str) -> set[str]:
@@ -47,7 +46,7 @@ def test_writestream_only_in_the_query_runners():
     root = os.path.dirname(os.path.abspath(pkg.__file__))
     sites = _writestream_sites(root)
     assert sites <= _ALLOWED, (
-        "writeStream used outside sinks.drain / jobs.run_to_completion "
+        "writeStream used outside sinks.drain "
         "— run the query through sinks.drain instead: "
         + ", ".join(sorted(sites - _ALLOWED)))
     assert sites == _ALLOWED

@@ -12,7 +12,8 @@ from pyspark.sql import functions as F
 from gmall_flink_2021_spark.functions.text import register_tokenizer_udtf
 from gmall_flink_2021_spark.sources import cdc as cdc_src
 from gmall_flink_2021_spark.sources import gmall_fixtures as fx
-from gmall_flink_2021_spark.streaming.jobs import run_to_completion
+
+from .stream_helpers import run_to_completion
 
 
 def test_tokenizer_udtf_lateral(spark):

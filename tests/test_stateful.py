@@ -11,7 +11,8 @@ from pyspark.sql import functions as F
 from gmall_flink_2021_spark.operators import dwd, dwm
 from gmall_flink_2021_spark.sources import gmall_fixtures as fx
 from gmall_flink_2021_spark.streaming import stateful
-from gmall_flink_2021_spark.streaming.jobs import run_to_completion
+
+from .stream_helpers import run_to_completion
 
 
 @pytest.fixture(scope="module")

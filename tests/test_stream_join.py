@@ -7,7 +7,8 @@ import json
 from gmall_flink_2021_spark.operators import dwd, gmall_dwm
 from gmall_flink_2021_spark.schemas import CDC_SCHEMA, TABLE_PROCESS_SCHEMA
 from gmall_flink_2021_spark.sources import gmall_fixtures as fx
-from gmall_flink_2021_spark.streaming.jobs import run_to_completion
+
+from .stream_helpers import run_to_completion
 
 
 def test_streaming_interval_join_matches_batch(spark, tmp_path):

@@ -1,5 +1,5 @@
 """The composed warehouse topology end-to-end: ODS files in, serving
-answers out, everything through the streaming jobs."""
+answers out, everything through the warehouse's streaming queries."""
 
 import datetime
 import os
@@ -203,6 +203,34 @@ def test_drain_reraises_sink_failure_and_leaves_no_query(spark, tmp_path):
 
     with pytest.raises(Exception, match="sink exploded"):
         sinks.drain(stream, sink, os.path.join(work, "ck", "fail"))
+    assert not spark.streams.active
+
+
+def test_failed_base_log_write_releases_its_persisted_batch(
+        spark, tmp_path, monkeypatch):
+    """run_base_log persists each micro-batch for its four writes. A
+    write that raises fails the query, and the persisted batch is
+    released all the same: the session's persisted-RDD count is back
+    where it was and no query is left running."""
+    work = str(tmp_path / "wh_log_fail")
+    wh = Warehouse(spark, work, fx.table_process_rows())
+    _load_fixture(work)
+    real_write = sinks.write_idempotent
+
+    def fail_on_log_page(df, bid, path):
+        if os.path.basename(path) == "log_page":
+            raise RuntimeError("log_page write failed")
+        real_write(df, bid, path)
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    before = persisted()
+    monkeypatch.setattr(sinks, "write_idempotent", fail_on_log_page)
+    with pytest.raises(Exception, match="log_page write failed"):
+        wh.run_base_log()
+    monkeypatch.undo()
+    assert persisted() == before
     assert not spark.streams.active
 
 
