@@ -4,8 +4,8 @@ The reference stamps every windowed row with window start/end as
 'yyyy-MM-dd HH:mm:ss' strings (stt/edt) plus a processing-time ts
 (gmall-realtime/.../app/dws/ProductStatsApp.java:249-262,
 VisitorStatsApp.java:167-180). Here the window struct produced by
-``F.window`` is projected to the same shape; the processing-time stamp
-is injectable for deterministic tests (SURVEY.md §2.8 F5).
+``F.window`` is projected to stt/edt timestamps; the processing-time
+stamp is injectable for deterministic tests (SURVEY.md §2.8 F5).
 """
 
 from __future__ import annotations
@@ -13,29 +13,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-STAMP_FMT = "yyyy-MM-dd HH:mm:ss"
-
-
 def window_stamps(window_col: str = "window") -> list[Column]:
     """Project a grouped ``window`` struct into stt/edt timestamps."""
     return [
         F.col(f"{window_col}.start").alias("stt"),
         F.col(f"{window_col}.end").alias("edt"),
     ]
-
-
-def window_stamps_str(window_col: str = "window") -> list[Column]:
-    """stt/edt as formatted strings, matching the reference beans."""
-    return [
-        F.date_format(f"{window_col}.start", STAMP_FMT).alias("stt"),
-        F.date_format(f"{window_col}.end", STAMP_FMT).alias("edt"),
-    ]
-
-
-def with_event_time(df: DataFrame, ts_millis_col: str = "ts",
-                    out: str = "et") -> DataFrame:
-    """Epoch-millis long → event-time timestamp column (F3)."""
-    return df.withColumn(out, F.timestamp_millis(F.col(ts_millis_col)))
 
 
 def dated(df: DataFrame, col: str = "ts") -> DataFrame:

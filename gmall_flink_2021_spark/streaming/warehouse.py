@@ -7,7 +7,7 @@ Topology (mirrors SURVEY.md §0's layer diagram):
 
   ods_log/   ──text──► parse → dirty/│start│page│display   (BaseLogApp)
   ods_db/    ──jsonl──► normalize → route via table_process (BaseDBApp)
-      ├─ dims → P3 per spec → bucket merge-by-pk, rename    (DimSink)
+      ├─ dims → P3 per spec → merge-by-pk, new version       (DimSink)
       └─ facts → typed streams
   page ──► UV dedup / bounce detect (stateful)              (UniqueVisit/UserJump)
   order⋈detail ──► order_wide  ──⋈payment──► payment_wide   (OrderWide/PaymentWide)
@@ -26,8 +26,9 @@ operators/gmall_dws are the check the tests compare it against.
 from __future__ import annotations
 
 import os
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -100,40 +101,59 @@ class Warehouse:
         stream = dwd.filter_deletes(stream)
 
         def sink(cdc_batch: DataFrame, bid: int) -> None:
-            batch = dwd.route_cdc(cdc_batch, self.config).persist()
+            # each row's place in the changelog: file path, then line
+            # order within the file (split start, then the row's id,
+            # which grows along a split), so a key's last change wins
+            pos = F.struct(F.input_file_name(), F.input_file_block_start(),
+                           F.monotonically_increasing_id())
+            batch = dwd.route_cdc(cdc_batch.withColumn("_pos", pos),
+                                  self.config).persist()
             try:
                 facts = batch.filter(F.col("sink_type") == "kafka")
-                sinks.write_routed(facts, bid, self._p("dwd_facts"))
-                # K4, config-driven end-to-end: table, column list and
-                # pk travel on the routed rows — straight from the
-                # table_process config — so a config row arriving
-                # mid-stream materializes a brand-new dim table on its
-                # first batch (TableProcessFunction.java:62-121). One
-                # table can carry several specs (e.g. different
-                # sink_columns per operate_type): each spec's rows are
-                # projected with ITS column list, as the reference does
-                # per record (ibid:155-172).
-                dims = batch.filter(F.col("sink_type") == "hbase")
-                for spec in dims.select("sink_table", "sink_columns",
-                                        "sink_pk").distinct().collect():
-                    rows = dims.filter(
-                        (F.col("sink_table") == spec.sink_table)
-                        & F.col("sink_columns").eqNullSafe(spec.sink_columns)
-                        & F.col("sink_pk").eqNullSafe(spec.sink_pk))
-                    pk = spec.sink_pk or "id"
-                    cols = dwd.sink_column_list(
-                        rows, spec.sink_table, spec.sink_columns, pk)
-                    if cols is None:
-                        continue
-                    projected = dwd.project_sink_columns(
-                        rows, spec.sink_table, cols)
-                    sinks.upsert_dim(
-                        projected.withColumn(pk, F.col(pk).cast("long")),
-                        self._p("dim", spec.sink_table), pk=pk)
+                sinks.write_routed(facts.drop("_pos"), bid,
+                                   self._p("dwd_facts"))
+                self._merge_dims(batch.filter(F.col("sink_type") == "hbase"))
             finally:
                 batch.unpersist()
 
         sinks.drain(stream, sink, self._p("ck", "base_db"))
+
+    def _merge_dims(self, dims: DataFrame) -> None:
+        """K4, config-driven end-to-end: table, column list and pk
+        travel on the routed rows — straight from the table_process
+        config — so a config row arriving mid-stream materializes a
+        brand-new dim table on its first batch
+        (TableProcessFunction.java:62-121). One table can carry several
+        specs (e.g. different sink_columns per operate_type): each
+        row is projected with ITS spec's column list, as the reference
+        does per record (ibid:155-172). A table's rows merge as one
+        batch holding each key's last change, as Phoenix applies the
+        upserts in order."""
+        specs: dict[tuple[str, str], list] = {}
+        for s in dims.select("sink_table", "sink_columns",
+                             "sink_pk").distinct().collect():
+            specs.setdefault((s.sink_table, s.sink_pk or "id"), []) \
+                .append(s.sink_columns)
+        for (table, pk), columns in sorted(specs.items()):
+            key = F.get_json_object("data", f"$.{pk}").cast("long")
+            last = (dims.filter((F.col("sink_table") == table)
+                                & (F.coalesce("sink_pk", F.lit("id")) == pk))
+                    .withColumn("_rn", F.row_number().over(
+                        Window.partitionBy(key).orderBy(F.desc("_pos"))))
+                    .filter(F.col("_rn") == 1))
+            parts = []
+            for sink_columns in sorted(columns, key=lambda c: c or ""):
+                rows = last.filter(
+                    F.col("sink_columns").eqNullSafe(sink_columns))
+                cols = dwd.sink_column_list(rows, table, sink_columns, pk)
+                if cols is not None:
+                    parts.append(dwd.project_sink_columns(rows, table, cols))
+            if parts:
+                batch = reduce(lambda a, b: a.unionByName(
+                    b, allowMissingColumns=True), parts)
+                sinks.upsert_dim(
+                    batch.withColumn(pk, F.col(pk).cast("long")),
+                    self._p("dim", table), pk=pk)
 
     def run_base_log(self) -> None:
         """BaseLogApp: raw log → dirty + start/page/display topics."""

@@ -320,3 +320,41 @@ def test_dim_tables_are_config_driven(spark, tmp_path):
     row = mat.collect()[0]
     assert (row["id"], row["material_name"], row["extra"]) \
         == (3, "cotton", "kept")
+
+
+@pytest.mark.parametrize("files", ["one", "two"])
+def test_last_change_to_a_dim_key_wins_within_a_batch(spark, tmp_path,
+                                                       files):
+    """Phoenix applies a batch's upserts in changelog order, so the
+    last change to a dim key wins. One micro-batch holds 40 inserts
+    (name=old<k>) and then updates of the same ids. In one file, the
+    updates (name=new<k>) follow the inserts. With two files, the
+    later-named one holds two rounds of updates (mid<k>, then new<k>)
+    and is the larger one, which Spark reads first (it packs file
+    splits largest first): neither the first row read per key nor the
+    last one is the last change. Every key ends at new<k>."""
+    import json
+
+    def change(op, k, name):
+        return json.dumps({
+            "database": "gmall2021", "table": "t", "type": op,
+            "data": json.dumps({"id": k, "name": name}),
+            "before_data": "{}"})
+
+    work = str(tmp_path / f"wh_last_{files}")
+    wh = Warehouse(spark, work, [
+        {"source_table": "t", "operate_type": op, "sink_type": "hbase",
+         "sink_table": "dim_t", "sink_columns": "id,name", "sink_pk": "id",
+         "sink_extend": None} for op in ("insert", "update")])
+    inserts = [change("insert", k, f"old{k}") for k in range(40)]
+    updates = [change("update", k, f"new{k}") for k in range(40)]
+    ods = os.path.join(work, "ods_db")
+    chunks = ([inserts + updates] if files == "one" else
+              [inserts, [change("update", k, f"mid{k}")
+                         for k in range(40)] + updates])
+    for i, lines in enumerate(chunks):
+        with open(os.path.join(ods, f"changelog-{i}.jsonl"), "w") as f:
+            f.write("\n".join(lines) + "\n")
+    wh.run_base_db()
+    got = {r.id: r.name for r in wh.dim("dim_t").collect()}
+    assert got == {k: f"new{k}" for k in range(40)}
